@@ -142,7 +142,11 @@ object Sessions {
     * unionAll of the facet frames, a join of the halves) sees exactly
     * the frames a sequential build would have produced — the plan
     * shape and results are identical, only the wall-clock overlap
-    * changes. Exceptions from any thunk propagate to the caller.
+    * changes. A failure is rethrown only after EVERY thunk has finished,
+    * so no sibling is still running jobs (or reading checkpoint blocks
+    * the caller is about to release) when the caller sees it: the first
+    * failure in input order is thrown, the others ride along as
+    * suppressed exceptions.
     *
     * The pool is a shared daemon cached pool: threads are reused
     * across calls, nothing outlives the JVM, and nesting (a parallel
@@ -161,9 +165,15 @@ object Sessions {
       override def call(): A = t()
     }))
     // unwrap ExecutionException so callers see the original failure
-    futures.map { f =>
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    val outcomes = futures.map { f =>
+      try Right(f.get())
+      catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
+    }
+    outcomes.collect { case Left(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.collect { case Right(a) => a }
     }
   }
 }

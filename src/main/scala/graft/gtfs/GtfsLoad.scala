@@ -1,12 +1,19 @@
 package graft.gtfs
 
+import com.univocity.parsers.csv.CsvParser
+import graft.Sessions
 import graft.functions.dates
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
-import java.io.{File, FileOutputStream}
-import java.nio.file.{Files, Paths}
+import java.io.{BufferedReader, File, FileInputStream, FileOutputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
 
@@ -24,13 +31,20 @@ import scala.jdk.CollectionConverters._
   *  - run level: candidate (provider_id, run_date) pairs are anti-joined
   *    against the run table (operators.py:68-90);
   *  - row level: within a re-loaded run, rows left_anti existing PKs
-  *    before append (utils/__init__.py:55-56);
+  *    before append (utils/__init__.py:55-56); keys compare null-safe,
+  *    so the all-column keys of PK-less tables match rows holding NULLs;
   *  - archive level: CRC32-XOR content fingerprint dedup
   *    (data_provider/operators.py:145-152).
   *
-  * Scale posture: the driver-side work is only zip member extraction (one
-  * pass per archive, parallelizable across archives); all CSV parsing,
-  * conforming, dedup joins, and writes are distributed Spark jobs.
+  * Scale posture: the driver-side work is zip member extraction (one
+  * pass per archive) and parsing each member's header line. Each member
+  * then costs one distributed job: CSV scan, conform, CHECK split and
+  * partitioned write, with the appended and quarantined counts observed
+  * on that write instead of recounted. The PK anti-join runs only where
+  * rows can collide: for run-scoped keys against this run's own
+  * partition, which exists only after a failed earlier attempt; for
+  * `agency` against the provider's rows. The members of one load wave
+  * load concurrently; the waves keep the reference's member order.
   */
 class GtfsLoad(spark: SparkSession, warehouseDir: String) {
   import spark.implicits._
@@ -38,21 +52,20 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
   private def tablePath(t: String) = s"$warehouseDir/$t"
   private def exists(t: String) = Files.exists(Paths.get(tablePath(t)))
 
+  /** Canonical schema of a feed table plus the provenance pair. */
+  private def storedSchema(feedTable: String): StructType =
+    StructType(GtfsSchemas.feedTables(feedTable).fields :+
+      StructField("provider_id", StringType) :+ StructField("run_id", IntegerType))
+
   /** Warehouse table; a missing feed table yields an EMPTY frame with the
     * canonical schema + provenance pair, so downstream joins still resolve
     * (a feed may legitimately omit optional members like calendar_dates).
     */
   def table(name: String): DataFrame =
     if (exists(name)) spark.read.parquet(tablePath(name))
-    else GtfsSchemas.feedTables.get(name) match {
-      case Some(schema) =>
-        val withProv = org.apache.spark.sql.types.StructType(
-          schema.fields.toSeq :+
-            org.apache.spark.sql.types.StructField("provider_id", StringType) :+
-            org.apache.spark.sql.types.StructField("run_id", org.apache.spark.sql.types.IntegerType))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withProv)
-      case None => spark.emptyDataFrame
-    }
+    else if (GtfsSchemas.feedTables.contains(name))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storedSchema(name))
+    else spark.emptyDataFrame
 
   // ---- run / provider dimensions ----------------------------------------
 
@@ -72,13 +85,6 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
         .withColumn("created", current_timestamp())
         .write.mode(SaveMode.Append).parquet(tablePath("provider"))
     }
-  }
-
-  def registerRun(providerId: String, runDate: String): Int = {
-    val id = nextRunId()
-    Seq((id, runDate, providerId)).toDF("run_id", "run_date", "provider_id")
-      .write.mode(SaveMode.Append).parquet(tablePath("run"))
-    id
   }
 
   /** New-data identification (J2): candidates minus already-loaded runs. */
@@ -102,18 +108,6 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
     finally zf.close()
   }
 
-  /** True if an archive with this fingerprint was already ingested;
-    * otherwise records it. Manifest table: (provider_id, run_date, checksum).
-    */
-  def checkAndRecordChecksum(providerId: String, runDate: String, checksum: Long): Boolean = {
-    val dup = exists("archive_manifest") &&
-      table("archive_manifest").filter($"checksum" === checksum).count() > 0
-    if (!dup)
-      Seq((providerId, runDate, checksum)).toDF("provider_id", "run_date", "checksum")
-        .write.mode(SaveMode.Append).parquet(tablePath("archive_manifest"))
-    dup
-  }
-
   // ---- CSV conform ------------------------------------------------------
 
   /** Header sanitize: strip every char outside [a-z_] (reference KVV fix,
@@ -121,6 +115,25 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
     */
   private[gtfs] def sanitizeHeader(name: String): String =
     name.toLowerCase.replaceAll("[^a-z_]", "")
+
+  /** Column names of a CSV file as Spark's header inference names them,
+    * parsed on the driver instead of by a schema-sniffing job: the first
+    * non-blank line through Spark's univocity settings, then Spark's
+    * `_c<i>` for an empty cell and index suffix for a duplicate name.
+    */
+  private[gtfs] def headerColumns(csvPath: String): Array[String] = {
+    val opts = new CSVOptions(Map("header" -> "true"), true,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val in = new BufferedReader(new InputStreamReader(
+      new FileInputStream(csvPath), StandardCharsets.UTF_8))
+    try CSVExprUtils.extractHeader(in.lines().iterator().asScala, opts) match {
+      case Some(line) =>
+        // Hadoop's line reader drops a UTF-8 byte-order mark
+        val cells = new CsvParser(opts.asParserSettings).parseLine(line.stripPrefix("\uFEFF"))
+        CSVUtils.makeSafeHeader(cells, spark.sessionState.conf.caseSensitiveAnalysis, opts)
+      case None => Array.empty
+    } finally in.close()
+  }
 
   /** Read one extracted CSV member and conform it to the canonical schema:
     * header sanitize, ""->NULL, type casts, GTFS time parse, missing
@@ -130,11 +143,9 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
     val target = GtfsSchemas.feedTables(tableName)
     val raw = spark.read
       .option("header", true).option("nullValue", "")
-      .schema(StructType(
-        // read everything as string first; casts below are explicit so a
-        // malformed value becomes NULL, not a hard failure
-        spark.read.option("header", true).csv(csvPath).columns
-          .map(c => org.apache.spark.sql.types.StructField(c, StringType))))
+      // read everything as string first; casts below are explicit so a
+      // malformed value becomes NULL, not a hard failure
+      .schema(StructType(headerColumns(csvPath).map(StructField(_, StringType))))
       .csv(csvPath)
     val cleaned = raw.toDF(raw.columns.map(sanitizeHeader): _*)
     val timeCols = GtfsSchemas.gtfsTimeColumns.getOrElse(tableName, Nil)
@@ -151,11 +162,10 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
 
   // ---- load -------------------------------------------------------------
 
-  /** Extract zip members to a temp dir; returns member-stem -> file path.
+  /** Extract zip members into `outDir`; returns member-stem -> file path.
     * Members with no schema entry are skipped (operators.py:144-147).
     */
-  private def extractMembers(zipPath: String): Map[String, String] = {
-    val outDir = Files.createTempDirectory("gtfs_extract").toFile
+  private def extractMembers(zipPath: String, outDir: File): Map[String, String] = {
     val zf = new ZipFile(zipPath)
     try {
       zf.entries().asScala.flatMap { e =>
@@ -172,51 +182,75 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
     } finally zf.close()
   }
 
+  private def deleteTree(root: Path): Unit = if (Files.exists(root)) {
+    val paths = Files.walk(root)
+    try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally paths.close()
+  }
+
+  /** Appends the rows of `rows` whose key `pk` is not stored in table `t`
+    * yet, in one partitioned write; returns how many landed. Keys compare
+    * null-safe. A key holding `run_id` can only collide inside this run's
+    * partition, which exists only if a failed earlier attempt wrote to
+    * it, so the anti-join reads that partition alone and is skipped when
+    * it is absent; any other key is checked against the provider's rows.
+    */
+  private def appendNew(t: String, schema: StructType, rows: DataFrame, pk: Seq[String],
+                        runId: Int, providerId: String): Long = {
+    val createsTable = !exists(t)
+    val stored =
+      if (pk.contains("run_id")) {
+        val part = Paths.get(tablePath(t), getPartitionPathString("provider_id", providerId),
+          getPartitionPathString("run_id", runId.toString))
+        if (!Files.exists(part)) None
+        else Some(spark.read.schema(schema).option("basePath", tablePath(t)).parquet(part.toString))
+      } else if (createsTable) None
+      else Some(spark.read.schema(schema).parquet(tablePath(t)).filter($"provider_id" === providerId))
+    val fresh = stored.fold(rows) { s =>
+      rows.join(s, pk.map(c => rows(c) <=> s(c)).reduce(_ && _), "left_anti")
+    }
+    val landed = Observation()
+    fresh.observe(landed, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Append)
+      .partitionBy("provider_id", "run_id")
+      .parquet(tablePath(t))
+    val n = landed.get("rows").asInstanceOf[Long]
+    // a write of no rows leaves a directory with no schema to read back;
+    // table() must keep returning the canonical empty frame instead
+    if (n == 0 && createsTable) deleteTree(Paths.get(tablePath(t)))
+    n
+  }
+
   /** Idempotent per-table append: prepend provenance, CHECK-split, PK
     * anti-join against existing rows, partitioned write. Returns
-    * (appended, quarantined) row counts.
+    * (appended, quarantined) row counts. One write job; a second one
+    * lands the rejects only when the CHECK split quarantined rows.
     */
   def appendTable(tableName: String, conformed: DataFrame,
                   runId: Int, providerId: String): (Long, Long) = {
     val withProv = conformed
       .withColumn("run_id", lit(runId))
       .withColumn("provider_id", lit(providerId))
-    // cache: the CHECK split and anti-join feed both a count and a write
-    // (without it each conform+filter DAG re-executes per action)
-    withProv.cache()
-    try {
-      val (ok, quarantined) = GtfsSchemas.checkConstraints.get(tableName) match {
-        case Some(pred) => (withProv.filter(pred), withProv.filter(!pred))
-        case None => (withProv, spark.emptyDataFrame)
-      }
-      val qn = if (quarantined.isEmpty) 0L else {
-        quarantined.write.mode(SaveMode.Append)
-          .partitionBy("provider_id", "run_id")
-          .parquet(tablePath(s"${tableName}_rejects"))
-        quarantined.count()
-      }
-      val pk = GtfsSchemas.primaryKeys.getOrElse(tableName,
-        Seq("run_id") ++ conformed.columns)
-      val fresh =
-        if (!exists(tableName)) ok
-        else ok.join(
-          // pruned to this run's partition by the run_id filter
-          table(tableName).filter($"run_id" === runId || $"provider_id" === providerId)
-            .select(pk.map(col).toIndexedSeq: _*),
-          pk, "left_anti").cache()
-      val n = fresh.count()
-      if (n > 0)
-        fresh.write.mode(SaveMode.Append)
-          .partitionBy("provider_id", "run_id")
-          .parquet(tablePath(tableName))
-      fresh.unpersist()
-      (n, qn)
-    } finally withProv.unpersist()
+    val check = GtfsSchemas.checkConstraints.getOrElse(tableName, lit(true))
+    val allColumns = "run_id" +: conformed.columns.toSeq
+    val pk = GtfsSchemas.primaryKeys.getOrElse(tableName, allColumns)
+    val split = Observation()
+    val ok = withProv.observe(split, count_if(!check).as("rejected")).filter(check)
+    val n = appendNew(tableName, storedSchema(tableName), ok, pk, runId, providerId)
+    val qn = split.get("rejected").asInstanceOf[Long]
+    if (qn > 0)
+      appendNew(s"${tableName}_rejects", storedSchema(tableName), withProv.filter(!check),
+        allColumns, runId, providerId)
+    (n, qn)
   }
 
   /** Load one archive end-to-end in FK waves. Returns per-table appended
     * counts; None if the run was already loaded or the archive is a
     * content-duplicate.
+    *
+    * The members of one wave load concurrently; the next wave starts
+    * only once every member of the previous one has landed, which keeps
+    * the reference's member ranking (operators.py:136-141).
     *
     * Failure atomicity: the run row and checksum manifest are written
     * only AFTER every table appended successfully — a mid-load crash
@@ -233,18 +267,20 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
       return None
     registerProvider(providerId)
     val runId = nextRunId()
-    val members = extractMembers(zipPath)
-    val counts = GtfsSchemas.loadWaves.flatMap { wave =>
-      wave.flatMap { t =>
-        members.get(t).map { path =>
-          t -> appendTable(t, conform(path, t), runId, providerId)._1
-        }
-      }
-    }.toMap
+    val extracted = Files.createTempDirectory("gtfs_extract")
+    val counts = try {
+      val members = extractMembers(zipPath, extracted.toFile)
+      GtfsSchemas.loadWaves.flatMap { wave =>
+        Sessions.inParallel(wave.flatMap(t => members.get(t).map { path =>
+          () => t -> appendTable(t, conform(path, t), runId, providerId)._1
+        }): _*)
+      }.toMap
+    } finally deleteTree(extracted)
     // commit point: run row + manifest only once all appends succeeded
     Seq((runId, runDate, providerId)).toDF("run_id", "run_date", "provider_id")
       .write.mode(SaveMode.Append).parquet(tablePath("run"))
-    checkAndRecordChecksum(providerId, runDate, checksum)
+    Seq((providerId, runDate, checksum)).toDF("provider_id", "run_date", "checksum")
+      .write.mode(SaveMode.Append).parquet(tablePath("archive_manifest"))
     Some(counts)
   }
 

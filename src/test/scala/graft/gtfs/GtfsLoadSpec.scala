@@ -76,12 +76,13 @@ class GtfsLoadSpec extends SparkSpec {
     (new GtfsLoad(spark, wh.getAbsolutePath), wh)
   }
 
-  private def fixtureZip(name: String = "2019-02-21.zip"): File = {
-    val dir = Files.createTempDirectory("gtfs_zip").toFile
-    val f = new File(dir, name)
-    writeZip(f, feedMembers)
+  private def zipOf(members: Map[String, String], name: String = "2019-02-21.zip"): File = {
+    val f = new File(Files.createTempDirectory("gtfs_zip").toFile, name)
+    writeZip(f, members)
     f
   }
+
+  private def fixtureZip(name: String = "2019-02-21.zip"): File = zipOf(feedMembers, name)
 
   test("load conforms dirty input: sanitized headers, nulls, skipped members, quarantine") {
     val (loader, _) = freshLoader()
@@ -112,6 +113,129 @@ class GtfsLoadSpec extends SparkSpec {
     assert(loader.loadArchive("vbb", "2019-02-22", dup.getAbsolutePath).isEmpty)
     assert(loader.table("stops").count() === 3)
     assert(loader.table("run").count() === 1)
+  }
+
+  /** Every stored row of a table, as sorted strings (order-free compare). */
+  private def storedRows(loader: GtfsLoad, table: String): Seq[String] =
+    loader.table(table).collect().map(_.toString).sorted.toSeq
+
+  test("a retry after a partial load appends no duplicates") {
+    val (clean, _) = freshLoader()
+    clean.loadArchive("vbb", "2019-02-21", fixtureZip().getAbsolutePath)
+    // a failed first attempt at run 1 landed agency, stop_times (with its
+    // reject), calendar_dates and part of stops before it died, so the run
+    // row was never written
+    val (retried, _) = freshLoader()
+    val partial = Files.createTempDirectory("gtfs_partial").toFile
+    retried.registerProvider("vbb")
+    Seq(
+      "agency" -> feedMembers("agency.txt"),
+      "stops" -> feedMembers("stops.txt").linesIterator.take(2).mkString("\n"),
+      "stop_times" -> feedMembers("stop_times.txt"),
+      "calendar_dates" -> feedMembers("calendar_dates.txt"),
+    ).foreach { case (t, content) =>
+      val f = new File(partial, s"$t.txt")
+      Files.write(f.toPath, content.getBytes(StandardCharsets.UTF_8))
+      retried.appendTable(t, retried.conform(f.getAbsolutePath, t), 1, "vbb")
+    }
+    val counts = retried.loadArchive("vbb", "2019-02-21", fixtureZip().getAbsolutePath).get
+    assert(counts("agency") === 0 && counts("stop_times") === 0 &&
+      counts("calendar_dates") === 0)
+    assert(counts("stops") === 2 && counts("trips") === 4)
+    // stop_times rows carry NULLs (stop_headsign, ...): only a null-safe
+    // all-column compare recognizes them as already stored
+    for (t <- GtfsSchemas.feedTables.keys.toSeq.sorted :+ "stop_times_rejects")
+      assert(storedRows(retried, t) === storedRows(clean, t), t)
+  }
+
+  test("a retry member whose rows are all stored or rejected lands nothing") {
+    val (loader, _) = freshLoader()
+    val dir = Files.createTempDirectory("gtfs_members").toFile
+    def append(name: String, content: String): (Long, Long) = {
+      val f = new File(dir, name)
+      Files.write(f.toPath, content.getBytes(StandardCharsets.UTF_8))
+      loader.appendTable("stop_times", loader.conform(f.getAbsolutePath, "stop_times"), 1, "vbb")
+    }
+    val st = feedMembers("stop_times.txt")
+    assert(append("full.txt", st) === ((5L, 1L)))
+    // run 1's partitions now exist, so every later append goes through
+    // the anti-join, with an empty or fully stored input
+    assert(append("header.txt", st.linesIterator.next()) === ((0L, 0L)))
+    assert(append("rejected.txt", "trip_id,pickup_type\nX,9") === ((0L, 1L)))
+    assert(append("again.txt", st) === ((0L, 1L)))
+    assert(loader.table("stop_times").count() === 5)
+    assert(loader.table("stop_times_rejects").count() === 2)
+  }
+
+  test("a failed load leaves no run row and no extracted files; its retry completes it") {
+    val tmp = new File(System.getProperty("java.io.tmpdir"))
+    def extracts() = tmp.listFiles().map(_.getName).filter(_.startsWith("gtfs_extract")).toSet
+    val before = extracts()
+    val (loader, _) = freshLoader()
+    // a duplicated column makes stops fail to conform while the other
+    // members of its wave load
+    val broken = feedMembers.updated("stops.txt",
+      feedMembers("stops.txt").replaceFirst("stop_code", "stop_id"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      loader.loadArchive("vbb", "2019-02-21", zipOf(broken).getAbsolutePath))
+    assert(extracts() -- before === Set.empty)
+    assert(loader.table("run").isEmpty && loader.table("stops").isEmpty)
+    assert(loader.table("agency").count() === 1)
+
+    val counts = loader.loadArchive("vbb", "2019-02-21", fixtureZip().getAbsolutePath).get
+    assert(counts("agency") === 0 && counts("stops") === 3)
+    assert(extracts() -- before === Set.empty)
+    val (clean, _) = freshLoader()
+    clean.loadArchive("vbb", "2019-02-21", fixtureZip().getAbsolutePath)
+    for (t <- GtfsSchemas.feedTables.keys.toSeq.sorted)
+      assert(storedRows(loader, t) === storedRows(clean, t), t)
+  }
+
+  test("a header-only member loads no rows and reads back with its schema") {
+    val (loader, wh) = freshLoader()
+    val members = feedMembers.updated("calendar_dates.txt", "service_id,date,exception_type\n")
+    val counts = loader.loadArchive("vbb", "2019-02-21", zipOf(members).getAbsolutePath).get
+    assert(counts("calendar_dates") === 0)
+    assert(!new File(wh, "calendar_dates").exists())
+    val cd = loader.table("calendar_dates")
+    assert(cd.count() === 0)
+    assert(cd.schema.fieldNames.toSeq ===
+      Seq("service_id", "date", "exception_type", "provider_id", "run_id"))
+  }
+
+  test("a quoted header conforms like an unquoted one") {
+    val (plain, _) = freshLoader()
+    plain.loadArchive("vbb", "2019-02-21", fixtureZip().getAbsolutePath)
+    val (quoted, _) = freshLoader()
+    val header :: rows = feedMembers("stops.txt").linesIterator.toList
+    val quotedStops = (header.split(",").map(c => "\"" + c + "\"").mkString(",") :: rows).mkString("\n")
+    quoted.loadArchive("vbb", "2019-02-21",
+      zipOf(feedMembers.updated("stops.txt", quotedStops)).getAbsolutePath)
+    assert(storedRows(quoted, "stops").size === 3)
+    assert(storedRows(quoted, "stops") === storedRows(plain, "stops"))
+  }
+
+  test("driver-side header parse names columns as Spark's CSV inference does") {
+    val dir = Files.createTempDirectory("gtfs_headers").toFile
+    val (loader, _) = freshLoader()
+    val headers = Seq(
+      "stop_id ;,stop_code,stop_name\nS1,,A",
+      "\"stop_id\",\"stop_name\"\nS1,A",
+      "a,,c\n1,2,3",
+      "a,b,\n1,2,3",
+      "A,a,b\n1,2,3",
+      "\n  \nstop_id,stop_name\nS1,A",
+      "\uFEFFstop_id,stop_name\nS1,A",
+      "stop_id,stop_name\r\nS1,A\r\n",
+      " stop_id , stop_name \nS1,A",
+      "\"stop,id\",name\nS1,A",
+      "only_header")
+    headers.zipWithIndex.foreach { case (content, i) =>
+      val f = new File(dir, s"h$i.txt")
+      Files.write(f.toPath, content.getBytes(StandardCharsets.UTF_8))
+      val inferred = spark.read.option("header", true).csv(f.getAbsolutePath).columns.toSeq
+      assert(loader.headerColumns(f.getAbsolutePath).toSeq === inferred, content)
+    }
   }
 
   test("arrivals pipeline: expansion honors weekdays, validity, exceptions, day-roll") {
