@@ -38,20 +38,23 @@ object ArrivalsQuery {
     * filtering — at a 7-day window that's a bounded 7x, map-side, no
     * shuffle (J4 as explode(sequence), SURVEY §2.4).
     */
-  def expandServiceDates(calendar: DataFrame, windowStart: String, windowEnd: String): DataFrame = {
-    val flags = array(weekdayFlags.map(col): _*)
+  def expandServiceDates(calendar: DataFrame, windowStart: String, windowEnd: String): DataFrame =
     calendar
       .withColumn("service_date",
         explode(sequence(
           to_date(lit(windowStart)),
           date_sub(to_date(lit(windowEnd)), 1), // [start, end)
           expr("interval 1 day"))))
-      // P3 weekday validity: Monday=0 indexes the flag array (1-based element_at)
-      .filter(element_at(flags, dates.weekdayIndex(col("service_date")) + 1))
-      // P4 intended record-validity semantics
-      .filter(dates.encodeDateInt(col("service_date")).between(
-        col("start_date"), col("end_date")))
-  }
+      .filter(calendarActive)
+
+  /** Whether the calendar row's weekly pattern runs on `service_date`:
+    * P3 weekday flag (Monday=0 indexes the flag array, 1-based
+    * element_at) and P4 intended record-validity semantics. NULL when
+    * the row has no calendar columns.
+    */
+  private def calendarActive: Column =
+    element_at(array(weekdayFlags.map(col): _*), dates.weekdayIndex(col("service_date")) + 1) &&
+      dates.encodeDateInt(col("service_date")).between(col("start_date"), col("end_date"))
 
   /** Apply GTFS calendar_dates REMOVALS (exception_type=2) to an expanded
     * (service_id, run_id, service_date) frame — half of the fidelity gap
@@ -66,39 +69,42 @@ object ArrivalsQuery {
     expanded.join(removed, Seq("run_id", "service_id", "service_date"), "left_anti")
   }
 
-  /** The full arrivals pipeline over warehouse tables.
-    *
-    * calendar ⋈ trips ⋈ stop_times ⋈ stops on composite keys
-    * (GtfsDAO.java:44-46), date-window pushdown predicate
-    * (`end_date >= start AND start_date < end`, :47), calendar expansion,
-    * event-time materialisation with >24h day-roll, ordered by event time.
-    *
-    * Join scale shape: calendar is tiny (broadcasts); trips and stops are
-    * small dims (AQE broadcasts at real-world sizes); stop_times is the
-    * fact (VBB ~10^7 rows/feed) and is never shuffled more than once —
-    * its composite key (run_id, trip_id) joins against the already-joined
-    * calendar×trips side.
+  /** The 3-way composite-key join over the fact (GtfsDAO.java:44-46):
+    * trips ⋈ stop_times ⋈ stops, one row per stop call, keyed by
+    * (run_id, service_id) for the join with an active-date set.
     */
-  /** The 4-way composite-key join chain, pre-expansion (J1). Shared by
-    * [[arrivals]] (calendar pre-filtered by the P2 window predicate) and
-    * the exceptions path (unfiltered: a type-1 added date is valid even
-    * outside the service's calendar range, per the GTFS spec).
-    */
-  private def joinServiceRows(calendar: DataFrame, trips: DataFrame,
-                              stopTimes: DataFrame, stops: DataFrame): DataFrame =
-    calendar
-      .join(trips, Seq("run_id", "service_id"))
+  private def stopCalls(trips: DataFrame, stopTimes: DataFrame, stops: DataFrame): DataFrame =
+    trips
       .join(stopTimes, Seq("run_id", "trip_id"))
       .join(stops, Seq("run_id", "stop_id"))
-      .select(
-        (weekdayFlags.map(col) ++ Seq(
-          col("run_id"), col("service_id"), col("trip_id"), col("stop_id"),
-          col("stop_name"), col("arrival_time"), col("stop_lat"),
-          col("stop_lon"), col("start_date"), col("end_date"))): _*)
+      .select(col("run_id"), col("service_id"), col("trip_id"), col("stop_id"),
+        col("stop_name"), col("arrival_time"), col("stop_lat"), col("stop_lon"))
 
-  /** Event-time materialisation + presentation columns shared by both
-    * arrival pipelines.
+  /** (run_id, service_id, service_date) for every weekday-active date in
+    * [windowStart, windowEnd) of the calendar rows that overlap the window
+    * (P2 window-overlap pushdown, GtfsDAO.java:47 — it reaches the
+    * calendar scan). One row per (calendar row, date), so a duplicated
+    * calendar row still multiplies its arrivals as the 4-way join did.
     */
+  private def weekdayDates(calendar: DataFrame, windowStart: String, windowEnd: String): DataFrame = {
+    val startInt = windowStart.replace("-", "").toInt
+    val endInt = windowEnd.replace("-", "").toInt
+    expandServiceDates(
+      calendar.filter(col("end_date") >= startInt && col("start_date") < endInt),
+      windowStart, windowEnd)
+      .select(col("run_id"), col("service_id"), col("service_date"))
+  }
+
+  /** Stop calls on their active dates, event-time materialised. The
+    * active set is services × window days — dimension-sized at any feed
+    * size — so it broadcasts, and the fact is scanned and joined once.
+    */
+  private def callsOn(active: DataFrame, trips: DataFrame, stopTimes: DataFrame,
+                      stops: DataFrame): DataFrame =
+    finishArrivals(stopCalls(trips, stopTimes, stops)
+      .join(broadcast(active), Seq("run_id", "service_id")))
+
+  /** Event-time materialisation + presentation columns. */
   private def finishArrivals(expanded: DataFrame): DataFrame =
     expanded
       .withColumn("event_ts",
@@ -109,73 +115,60 @@ object ArrivalsQuery {
         col("service_date"))
       .orderBy(col("event_ts"))
 
-  def arrivals(calendar: DataFrame, trips: DataFrame, stopTimes: DataFrame,
-               stops: DataFrame, windowStart: String, windowEnd: String): DataFrame = {
-    val startInt = windowStart.replace("-", "").toInt
-    val endInt = windowEnd.replace("-", "").toInt
-    // P2 window-overlap pushdown — reaches the calendar scan
-    val cal = calendar.filter(
-      col("end_date") >= startInt && col("start_date") < endInt)
-    finishArrivals(
-      expandServiceDates(joinServiceRows(cal, trips, stopTimes, stops),
-        windowStart, windowEnd))
-  }
-
-  /** Columns both arrival branches reduce to before the union (weekday
-    * flags and validity bounds are branch-internal).
+  /** The arrivals pipeline over warehouse tables: calendar ⋈ trips ⋈
+    * stop_times ⋈ stops on composite keys (GtfsDAO.java:44-46), the
+    * date-window pushdown predicate (`end_date >= start AND start_date <
+    * end`, :47), calendar expansion, event-time materialisation with >24h
+    * day-roll, ordered by event time.
+    *
+    * Join scale shape: the calendar is expanded into its active dates
+    * BEFORE it meets the fact, so the generator runs over calendar rows,
+    * not stop calls. trips and stops are small dims (AQE broadcasts stops
+    * at real-world sizes); stop_times is the fact (VBB ~10^7 rows/feed),
+    * scanned once and shuffled at most once, on its (run_id, trip_id) key
+    * against trips; the active-date set broadcasts against the result.
     */
-  private val arrivalCols = Seq("run_id", "service_id", "trip_id", "stop_id",
-    "stop_name", "arrival_time", "stop_lat", "stop_lon", "service_date")
+  def arrivals(calendar: DataFrame, trips: DataFrame, stopTimes: DataFrame,
+               stops: DataFrame, windowStart: String, windowEnd: String): DataFrame =
+    callsOn(weekdayDates(calendar, windowStart, windowEnd), trips, stopTimes, stops)
 
   /** Full-fidelity arrivals: [[arrivals]] plus BOTH calendar_dates
     * exception kinds (GTFS spec: 1=service added on that date, 2=service
     * removed) — closing the reference's open gap entirely.
     *
-    * The added branch joins trips⋈stop_times⋈stops WITHOUT calendar:
-    * calendar.txt is conditionally optional in GTFS, so a service may be
-    * defined solely by its type-1 dates and must still emit. Dedup
-    * against the weekday expansion is a per-row predicate on the added
-    * side (calendar row exists ∧ weekday flag set ∧ date within
-    * validity), NOT an anti-join against the expanded frame — the
-    * expansion subtree would otherwise execute twice per action. Per the
-    * GTFS spec a (service_id, date) pair appears at most once in
-    * calendar_dates, so type-1 and type-2 can never collide on a date.
-    * Exceptions and calendar are tiny relative to stop_times — their
-    * joins broadcast at any scale.
+    * The exceptions act on the small active (run_id, service_id,
+    * service_date) set, never on arrival rows: the weekday expansion
+    * minus the type-2 removals, union the type-1 additions in the window
+    * that the calendar does not already make active. That last test is
+    * per added row (calendar row exists ∧ weekday flag set ∧ date within
+    * validity) against the UNFILTERED calendar, since a type-1 date is
+    * valid even outside its service's calendar range; a service with no
+    * calendar row at all still emits on its added dates (calendar.txt is
+    * conditionally optional in GTFS). Per the GTFS spec a (service_id,
+    * date) pair appears at most once in calendar_dates, so type-1 and
+    * type-2 never collide on a date. The set then joins the fact once:
+    * trips ⋈ stop_times ⋈ stops is scanned and joined a single time for
+    * both exception kinds, as in [[arrivals]].
     */
   def arrivalsWithExceptions(calendar: DataFrame, calendarDates: DataFrame,
                              trips: DataFrame, stopTimes: DataFrame, stops: DataFrame,
                              windowStart: String, windowEnd: String): DataFrame = {
     val startInt = windowStart.replace("-", "").toInt
     val endInt = windowEnd.replace("-", "").toInt
-    val cal = calendar.filter(
-      col("end_date") >= startInt && col("start_date") < endInt)
     val regular = applyCalendarExceptions(
-      expandServiceDates(joinServiceRows(cal, trips, stopTimes, stops),
-        windowStart, windowEnd),
-      calendarDates)
-    val addedDates = calendarDates.filter(col("exception_type") === 1)
+      weekdayDates(calendar, windowStart, windowEnd), calendarDates)
+    val added = calendarDates.filter(col("exception_type") === 1)
       .filter(col("date") >= startInt && col("date") < endInt)
       .select(col("run_id"), col("service_id"),
         dates.decodeDateInt(col("date")).as("service_date"))
-    val flags = array(weekdayFlags.map(col): _*)
-    val weekdayActive = col("start_date").isNotNull &&
-      element_at(flags, dates.weekdayIndex(col("service_date")) + 1) &&
-      dates.encodeDateInt(col("service_date")).between(
-        col("start_date"), col("end_date"))
-    val added = trips
-      .join(stopTimes, Seq("run_id", "trip_id"))
-      .join(stops, Seq("run_id", "stop_id"))
-      .join(addedDates, Seq("run_id", "service_id"))
       .join(calendar.select((Seq("run_id", "service_id", "start_date", "end_date")
           ++ weekdayFlags).map(col): _*),
         Seq("run_id", "service_id"), "left")
-      // already emitted by the regular expansion (coalesce: a null weekday
-      // flag must read "not active", not filter the row out via 3VL)
-      .filter(!coalesce(weekdayActive, lit(false)))
-    finishArrivals(
-      regular.select(arrivalCols.map(col): _*)
-        .unionByName(added.select(arrivalCols.map(col): _*)))
+      // already active by the weekday expansion (coalesce: a missing
+      // calendar row must read "not active", not filter the row out via 3VL)
+      .filter(!coalesce(calendarActive, lit(false)))
+      .select(col("run_id"), col("service_id"), col("service_date"))
+    callsOn(regular.unionByName(added), trips, stopTimes, stops)
   }
 
   /** Materialize GTFS frequencies.txt (headway-based service) into

@@ -3,16 +3,17 @@ package graft.gtfs
 import com.univocity.parsers.csv.CsvParser
 import graft.Sessions
 import graft.functions.dates
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
 import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
 import java.io.{BufferedReader, File, FileInputStream, FileOutputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
+import java.time.Instant
 import java.util.Comparator
 import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
@@ -45,6 +46,13 @@ import scala.jdk.CollectionConverters._
   * partition, which exists only after a failed earlier attempt; for
   * `agency` against the provider's rows. The members of one load wave
   * load concurrently; the waves keep the reference's member order.
+  *
+  * On the read side, `table()` reads every table with the schema it was
+  * written with, so building a frame starts no job: no parquet schema
+  * inference, and the partition columns keep their declared types. A
+  * load's bookkeeping is one collect of the run ledger (the already-loaded
+  * check and the next run_id are both answered from it on the driver;
+  * none before the first run), one manifest and one provider lookup.
   */
 class GtfsLoad(spark: SparkSession, warehouseDir: String) {
   import spark.implicits._
@@ -57,43 +65,77 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
     StructType(GtfsSchemas.feedTables(feedTable).fields :+
       StructField("provider_id", StringType) :+ StructField("run_id", IntegerType))
 
-  /** Warehouse table; a missing feed table yields an EMPTY frame with the
-    * canonical schema + provenance pair, so downstream joins still resolve
-    * (a feed may legitimately omit optional members like calendar_dates).
+  /** The loader's bookkeeping tables, each declared once: [[table]] reads
+    * them with these schemas and the commit-time rows are built from them.
     */
-  def table(name: String): DataFrame =
-    if (exists(name)) spark.read.parquet(tablePath(name))
-    else if (GtfsSchemas.feedTables.contains(name))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storedSchema(name))
-    else spark.emptyDataFrame
+  private val runSchema = StructType(Seq(StructField("run_id", IntegerType, nullable = false),
+    StructField("run_date", StringType), StructField("provider_id", StringType)))
+  private val providerSchema = StructType(Seq(StructField("provider_id", StringType),
+    StructField("created", TimestampType)))
+  private val manifestSchema = StructType(Seq(StructField("provider_id", StringType),
+    StructField("run_date", StringType), StructField("checksum", LongType, nullable = false)))
+
+  /** Schema that table `name` is written with: a feed table and its
+    * `_rejects` twin store the feed schema plus the provenance pair.
+    */
+  private def schemaOf(name: String): Option[StructType] = {
+    val feed = name.stripSuffix("_rejects")
+    if (GtfsSchemas.feedTables.contains(feed)) Some(storedSchema(feed))
+    else Map("run" -> runSchema, "provider" -> providerSchema,
+      "archive_manifest" -> manifestSchema).get(name)
+  }
+
+  private def rowsOf(schema: StructType, rows: Row*): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** Warehouse table, read with the schema it was written with: no
+    * schema-inference job, and the partition columns keep their declared
+    * types (inference would turn provider "0815" into the int 815). A
+    * missing table yields an EMPTY frame with that schema, so downstream
+    * joins still resolve (a feed may legitimately omit optional members
+    * like calendar_dates).
+    */
+  def table(name: String): DataFrame = {
+    val schema = schemaOf(name)
+    if (exists(name)) schema.fold(spark.read)(spark.read.schema).parquet(tablePath(name))
+    else schema.fold(spark.emptyDataFrame)(rowsOf(_))
+  }
 
   // ---- run / provider dimensions ----------------------------------------
+
+  /** The run table on the driver, one (provider_id, run_date, run_id) per
+    * loaded run: one job, none when no run has been loaded yet.
+    */
+  private def runLedger(): Seq[(String, String, Int)] =
+    if (!exists("run")) Nil
+    else table("run").select($"provider_id", $"run_date", $"run_id")
+      .as[(String, String, Int)].collect().toSeq
 
   /** run dimension: (run_id, run_date, provider_id). Surrogate run_id is
     * max+1 on the single-writer driver (deterministic under retry, unlike
     * monotonically_increasing_id — SURVEY §2.12 I1).
     */
-  def nextRunId(): Int =
-    if (!exists("run")) 1
-    else table("run").agg(coalesce(max($"run_id"), lit(0))).head().getInt(0) + 1
+  def nextRunId(): Int = nextRunId(runLedger())
+
+  private def nextRunId(ledger: Seq[(String, String, Int)]): Int =
+    ledger.map(_._3).maxOption.getOrElse(0) + 1
 
   def registerProvider(providerId: String): Unit = {
     val existing = if (exists("provider"))
       table("provider").filter($"provider_id" === providerId).count() else 0L
-    if (existing == 0L) {
-      Seq(providerId).toDF("provider_id")
-        .withColumn("created", current_timestamp())
+    if (existing == 0L)
+      rowsOf(providerSchema, Row(providerId, Instant.now()))
         .write.mode(SaveMode.Append).parquet(tablePath("provider"))
-    }
   }
 
   /** New-data identification (J2): candidates minus already-loaded runs. */
-  def identifyNewRuns(candidates: Seq[(String, String)]): Seq[(String, String)] = {
-    val cand = candidates.toDF("provider_id", "run_date")
-    val newOnes =
-      if (!exists("run")) cand
-      else cand.join(table("run"), Seq("provider_id", "run_date"), "left_anti")
-    newOnes.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+  def identifyNewRuns(candidates: Seq[(String, String)]): Seq[(String, String)] =
+    newRuns(candidates, runLedger())
+
+  private def newRuns(candidates: Seq[(String, String)],
+                      ledger: Seq[(String, String, Int)]): Seq[(String, String)] = {
+    val loaded = ledger.map(r => (r._1, r._2)).toSet
+    candidates.filterNot(loaded)
   }
 
   // ---- archive fingerprint (A2/J3/I4) -----------------------------------
@@ -260,13 +302,14 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
     * permanently fence out the archive.
     */
   def loadArchive(providerId: String, runDate: String, zipPath: String): Option[Map[String, Long]] = {
-    if (identifyNewRuns(Seq((providerId, runDate))).isEmpty) return None
+    val ledger = runLedger()
+    if (newRuns(Seq((providerId, runDate)), ledger).isEmpty) return None
     val checksum = archiveChecksum(zipPath)
     if (exists("archive_manifest") &&
       table("archive_manifest").filter(col("checksum") === checksum).count() > 0)
       return None
     registerProvider(providerId)
-    val runId = nextRunId()
+    val runId = nextRunId(ledger)
     val extracted = Files.createTempDirectory("gtfs_extract")
     val counts = try {
       val members = extractMembers(zipPath, extracted.toFile)
@@ -277,9 +320,9 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
       }.toMap
     } finally deleteTree(extracted)
     // commit point: run row + manifest only once all appends succeeded
-    Seq((runId, runDate, providerId)).toDF("run_id", "run_date", "provider_id")
+    rowsOf(runSchema, Row(runId, runDate, providerId))
       .write.mode(SaveMode.Append).parquet(tablePath("run"))
-    Seq((providerId, runDate, checksum)).toDF("provider_id", "run_date", "checksum")
+    rowsOf(manifestSchema, Row(providerId, runDate, checksum))
       .write.mode(SaveMode.Append).parquet(tablePath("archive_manifest"))
     Some(counts)
   }

@@ -1,7 +1,9 @@
 package graft.gtfs
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
@@ -213,6 +215,60 @@ class GtfsLoadSpec extends SparkSpec {
       zipOf(feedMembers.updated("stops.txt", quotedStops)).getAbsolutePath)
     assert(storedRows(quoted, "stops").size === 3)
     assert(storedRows(quoted, "stops") === storedRows(plain, "stops"))
+  }
+
+  test("a numeric-looking provider id reads back as the string it was loaded under") {
+    val (loader, _) = freshLoader()
+    assert(loader.loadArchive("0815", "2019-02-21", fixtureZip().getAbsolutePath).isDefined)
+    val stops = loader.table("stops")
+    assert(stops.schema("provider_id").dataType === StringType)
+    assert(stops.select($"provider_id").distinct().as[String].collect().toSeq === Seq("0815"))
+    val second = zipOf(feedMembers.updated("stops.txt",
+      feedMembers("stops.txt") + "\nS4,,Neu Stop,,52.1,13.1"), "2019-03-01.zip")
+    assert(loader.loadArchive("0815", "2019-03-01", second.getAbsolutePath).isDefined)
+    assert(loader.table("run").filter($"run_date" === "2019-03-01")
+      .select($"run_id").as[Int].collect().toSeq === Seq(2))
+    assert(loader.table("stops").filter($"provider_id" === "0815" && $"run_id" === 2)
+      .count() === 4)
+  }
+
+  test("table() starts no job and matches Spark's schema inference") {
+    val (loader, wh) = freshLoader()
+    loader.loadArchive("vbb", "2019-02-21", fixtureZip().getAbsolutePath)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val names = Seq("stops", "stop_times_rejects", "run", "provider", "archive_manifest")
+    sc.addSparkListener(listener)
+    val frames = try {
+      sc.setJobGroup("gtfs-table-read", "build table() frames")
+      val built = try names.map(n => n -> loader.table(n)) finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the fence job is seen,
+      // every job started while the frames were built has been seen too
+      sc.setJobGroup("gtfs-table-fence", "listener fence")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("gtfs-table-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("gtfs-table-fence"))
+      built
+    } finally sc.removeSparkListener(listener)
+    assert(!groups.contains("gtfs-table-read"))
+    frames.foreach { case (n, df) =>
+      val dir = new File(wh, n)
+      val inferred = spark.read.parquet(dir.getAbsolutePath).schema
+      assert(df.schema.fieldNames.toSeq === inferred.fieldNames.toSeq, n)
+      // inference types partition columns from the directory names
+      val partitionCols =
+        if (new File(dir, "provider_id=vbb").isDirectory) Set("provider_id", "run_id") else Set.empty[String]
+      def types(s: StructType) = s.fields.filterNot(f => partitionCols(f.name))
+        .map(f => f.name -> f.dataType).toSeq
+      assert(types(df.schema) === types(inferred), n)
+    }
   }
 
   test("driver-side header parse names columns as Spark's CSV inference does") {

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Physical-plan audits: the scale properties SURVEY §4 promises —
@@ -151,6 +152,15 @@ class PlanSpec extends SparkSpec {
         "the trips⋈stop_times fact join must shuffle, never broadcast a " +
         "scaled side")
       assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]))
+      // both calendar_dates exception kinds share one pass over the fact:
+      // stop_times (the only input carrying arrival_time) is read by one
+      // leaf. A second one, a scan or a reused exchange of the first,
+      // would feed a second fact join
+      val factReads = nodes.filter {
+        case _: AdaptiveSparkPlanExec | _: QueryStageExec => false
+        case n => n.isInstanceOf[LeafExecNode] && n.output.exists(_.name == "arrival_time")
+      }
+      assert(factReads.size === 1, factReads.map(_.nodeName).mkString(", "))
       // semantics survive the scale-up: exactly mult × the base arrivals
       val baseCount = ArrivalsQuery.arrivalsWithExceptions(
         GtfsFixture.calendar(spark), GtfsFixture.calendarDates(spark),

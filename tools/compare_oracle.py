@@ -5,17 +5,27 @@ Runs each oracle_sql.json query in DuckDB over the sf parquet tables and
 compares (column names sorted, rows sorted, exact values) against the
 Spark parquet written by graft.Verify.
 
-Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir> [query ...]
+
+With query names, only those are compared (the subset a
+`graft.Verify <sfDir> <outDir> q1 q2` run dumped); a named query with no
+oracle entry or no Spark output fails.
 """
 import duckdb, json, math, sys, glob, os
 
-sf, out = sys.argv[1], sys.argv[2]
+sf, out, only = sys.argv[1], sys.argv[2], sys.argv[3:]
 con = duckdb.connect()
 for p in glob.glob(f"{sf}/*.parquet"):
     name = os.path.basename(p)[:-len(".parquet")]
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
+fails = 0
+if only:
+    for name in sorted(set(only) - oracle.keys()):
+        print(f"FAIL {name}: no oracle entry")
+        fails += 1
+    oracle = {n: q for n, q in oracle.items() if n in only}
 
 def canon(cols, rows):
     # repr(), not str(): the driver's hasher is type-sensitive (a Decimal
@@ -29,7 +39,6 @@ def canon(cols, rows):
         out_rows.append(tuple(repr(r[i]) for i in order))
     return [cols[i] for i in order], sorted(out_rows)
 
-fails = 0
 for name, sql in sorted(oracle.items()):
     try:
         oc = con.execute(sql)
@@ -62,7 +71,7 @@ for name, sql in sorted(oracle.items()):
         print(f"ok   {name} ({len(r1)} rows)")
 
 no_oracle = [d for d in os.listdir(out)
-             if os.path.isdir(f"{out}/{d}") and d not in oracle]
+             if os.path.isdir(f"{out}/{d}") and d not in oracle and not only]
 for d in sorted(no_oracle):
     n = con.execute(f"SELECT count(*) FROM '{out}/{d}/*.parquet'").fetchone()[0]
     print(f"--   {d}: no oracle, {n} rows")
