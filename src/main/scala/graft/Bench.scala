@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Bench main (driver contract): times every SparkEntry query at the
   * given SF, one JSON line on stdout. A warmup pass (trivial job + one
@@ -16,13 +17,13 @@ import org.apache.spark.sql.SparkSession
   * bench_details.json next to the build for anyone who wants all of it.
   *
   * Session hygiene (round 13): every query's localCheckpoint blocks are
-  * explicitly released after its runs ([[Sessions.releaseCheckpointBlocks]]).
+  * explicitly released after each of its runs ([[Sessions.releaseCheckpointBlocks]]).
   * Without this, blocks are reclaimed only by driver GC + the async
   * ContextCleaner, which on a 128 GiB heap lags the sweep by minutes —
   * round-12's driver artifact measured checkpoint-heavy queries late in
   * the alphabetical sweep degrading up to 27× (q_simhash_pairs 0.86 s
   * idle vs 23.4–34.7 s in-sweep) from that accumulated block pressure.
-  * `GRAFT_BENCH_RELEASE=0` disables the release for A/B diagnosis.
+  * The release runs in [[QueryLoop.attempt]], outside the timers.
   *
   * Telemetry (round 13): a SparkListener records per-query shuffle
   * read/write bytes, spill and peak task execution memory, and the
@@ -146,13 +147,19 @@ object Bench {
         .map(_.group(1)).getOrElse("")
       """"(q_[A-Za-z0-9_]+)":([0-9.]+)""".r.findAllMatchIn(qs)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // optional comma-separated subset for mini-sweep A/B diagnosis —
+    // same per-query protocol (warmup, release, telemetry) on a handful
+    // of queries, so a sweep-context effect is separable from the query
+    val selected = QueryLoop.select(sys.env.get("GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty))
     val prior = priorTimes("bench_details.json")
-    val spark = Sessions.local(cpus, cpus)
+    val loop = QueryLoop(defaultCpus = 32)
+    val spark = loop.spark
     val telemetry = new Telemetry
     spark.sparkContext.addSparkListener(telemetry)
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -168,51 +175,31 @@ object Bench {
     // so a typo'd 0/garbage value can't kill the bench mid-suite
     val nRuns = math.max(1,
       sys.env.get("GRAFT_BENCH_RUNS").flatMap(_.toIntOption).getOrElse(3))
-    val doRelease = sys.env.getOrElse("GRAFT_BENCH_RELEASE", "1") != "0"
-    // optional comma-separated subset for mini-sweep A/B diagnosis —
-    // same per-query protocol (warmup, release, telemetry) on a handful
-    // of queries, so a sweep-context effect is separable from the query
-    val only: Set[String] = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    def selected = if (only.isEmpty) SparkEntry.queries
-                   else SparkEntry.queries.filter(kv => only(kv._1))
-    // Between queries: free checkpoint blocks, and every 16th query
-    // nudge a driver GC — shuffle files and broadcast pieces are only
-    // reclaimed when the ContextCleaner's weak references die, and a
-    // 96 GiB heap can go the whole sweep without an old-gen GC (Spark
-    // ships spark.cleaner.periodicGC.interval=30min for exactly this;
-    // a 346-query sweep wants it denser). Both run OUTSIDE the timers.
-    var sinceGc = 0
-    def release(): Unit = if (doRelease) {
-      Sessions.releaseCheckpointBlocks(spark)
-      sinceGc += 1
-      if (sinceGc >= 16) { sinceGc = 0; System.gc() }
-      ()
-    }
     val sweepT0 = System.nanoTime()
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       val tOff = (System.nanoTime() - sweepT0) / 1e9
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      release()
+      loop.attempt(fn(spark, sfDir).count())
       telemetry.reset(spark)
       val gc0 = gcMillis()
       // a failing query must be distinguishable from a fast one: emit the
-      // JSON per-query value as "error" instead of a normal-looking time
+      // JSON per-query value as "error" instead of a normal-looking time.
+      // The timer stops inside the attempt, so the release is not timed.
       val runs = (1 to nRuns).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        val t = (System.nanoTime() - t0) / 1e9
-        release() // outside the timer; blocks never outlive the run
-        (t, ok)
+        loop.attempt {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }
       }
+      val times = runs.collect { case Right(t) => t }
       val (sr, sw, sp, pk) = telemetry.snapshotAfterDrain(spark)
       // residual persistent-RDD bytes AFTER release: ~0 when the release
       // discipline works, a growing number when it doesn't — the direct
       // measurement of round-12's session-degradation mechanism
       val resid = spark.sparkContext.getRDDStorageInfo
-      QueryResult(name, runs.map(_._1).min, runs.forall(_._2),
-        runs.map(_._1).max, sr / nRuns, sw / nRuns, sp / nRuns, pk,
+      QueryResult(name, times.minOption.getOrElse(0.0),
+        times.size == nRuns, times.maxOption.getOrElse(0.0),
+        sr / nRuns, sw / nRuns, sp / nRuns, pk,
         resid.map(r => r.memSize + r.diskSize).sum, resid.length,
         (gcMillis() - gc0) / 1e3, tOff)
     }
@@ -271,12 +258,12 @@ object Bench {
         s""""jitter":${nameArr(jitter.take(cap))},""" +
         s""""n_regressed":${regressed.size},""" +
         s""""regressed_vs_prior":${nameArr(regressed.take(cap))},""" +
-        s""""prior_known":${prior.nonEmpty},"release_enabled":$doRelease}"""
+        s""""prior_known":${prior.nonEmpty},"release_enabled":true}"""
     val full = s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"canary_sec":$canaryStr,$pcStr,${suspectStr(Int.MaxValue)},"queries":$fullQs,"run_spread":$spreadQs,"telemetry":$telemQs,"n_queries":${results.size},"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("bench_details.json")
       try w.println(full) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // stdout line: errors first (never drop an "error" marker), then the
     // suspect verdicts, then the slowest queries that fit the budget

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.expressions.{BloomMightContain, DotProduct, ZOrderKey}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -23,22 +22,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * through FunctionRegistry builders.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getCanonicalName, "dot_product"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[BloomMightContain].getCanonicalName, "bloom_might_contain"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomMightContain(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("z_order_key"),
-      new ExpressionInfo(classOf[ZOrderKey].getCanonicalName, "z_order_key"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZOrderKey(exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.registry.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getCanonicalName, name), build))
+    }
 }

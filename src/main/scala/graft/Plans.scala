@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump `.explain("formatted")` for named SparkEntry queries into
   * `<outDir>/<query>_<tag>.txt` — the optimization rounds' plan evidence
@@ -12,37 +14,37 @@ import java.nio.file.{Files, Paths}
   * visible at this stage.
   */
 object Plans {
+  /** The formatted plan of `df` with each `#<n>` expression id and each
+    * `plan_id=<n>` exchange id renumbered by order of first appearance (a
+    * type suffix such as `L` stays), so two builds of one query dump the
+    * same text: both ids come from JVM-wide counters that every earlier
+    * or concurrent build advances.
+    */
+  def dump(df: DataFrame): String =
+    Seq("#", "plan_id=").foldLeft(
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))) {
+      (text, prefix) =>
+        val ids = scala.collection.mutable.Map.empty[String, Int]
+        (java.util.regex.Pattern.quote(prefix) + "(\\d+)").r.replaceAllIn(text,
+          m => prefix + ids.getOrElseUpdate(m.group(1), ids.size))
+    }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
       System.err.println("usage: runMain graft.Plans <sfDir> <outDir> <tag> [query ...]")
       sys.exit(2)
     }
     val Array(sfDir, outDir, tag) = args.take(3)
-    val only = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, cpus)
+    val selected = QueryLoop.select(args.drop(3).toSet)
+    val loop = QueryLoop(defaultCpus = 32)
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
-    only.filterNot(SparkEntry.queries.contains)
-      .foreach(n => System.err.println(s"!! unknown query: $n"))
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
-        // iterative operators localCheckpoint during construction; free
-        // their blocks so a multi-query dump doesn't accumulate pressure
-        Sessions.releaseCheckpointBlocks(spark)
-        println(s"[plans] wrote ${name}_$tag.txt")
-      } catch { case scala.util.control.NonFatal(e) =>
-        // NonFatal, not Throwable: an OOM/fatal error should kill the
-        // dump run loudly, not be logged away as a per-query failure
-        System.err.println(s"[plans] $name failed: ${e.getMessage}")
+    selected.foreach { case (name, fn) =>
+      loop.attempt(Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"),
+        dump(fn(loop.spark, sfDir)))) match {
+        case Right(_) => println(s"[plans] wrote ${name}_$tag.txt")
+        case Left(e) => System.err.println(s"[plans] $name failed: ${e.getMessage}")
       }
     }
-    spark.stop()
+    loop.spark.stop()
   }
 }

@@ -305,8 +305,29 @@ object ArrivalsQuery {
                        stops: DataFrame, transfers: DataFrame,
                        originStop: String, serviceDate: String,
                        departSecs: Long, maxRounds: Int = 4): DataFrame = {
-    val s = stopTimes.sparkSession
-    import s.implicits._
+    val labels = raptorRounds(calendar, calendarDates, trips, stopTimes,
+      stops, transfers, originStop, serviceDate, departSecs, maxRounds).last
+    stops.select(col("run_id"), col("stop_id"), col("stop_name"))
+      .join(labels, Seq("run_id", "stop_id"), "left")
+      .select(col("run_id"), col("stop_id"), col("stop_name"),
+        col("best").as("arr_secs"),
+        when(col("best").isNotNull, dates.gtfsLocalTimeString(
+          dates.gtfsEventTimestamp(to_date(lit(serviceDate)), col("best"))))
+          .as("arr_time"))
+      .orderBy(col("run_id"), col("stop_id"))
+  }
+
+  /** The RAPTOR set-up [[earliestArrivals]] and [[earliestArrivalProfile]]
+    * share, so the two cannot drift: the trips active on `serviceDate`,
+    * their checkpointed [[suffixLegs]], the footpath edges (type 3
+    * excluded) and the origin label, relaxed `maxRounds` times. Element
+    * k is the checkpointed label frame after k rounds (0 = the origin).
+    */
+  private def raptorRounds(calendar: DataFrame, calendarDates: DataFrame,
+                           trips: DataFrame, stopTimes: DataFrame,
+                           stops: DataFrame, transfers: DataFrame,
+                           originStop: String, serviceDate: String,
+                           departSecs: Long, maxRounds: Int): Seq[DataFrame] = {
     val nextDay = java.time.LocalDate.parse(serviceDate).plusDays(1).toString
     val active = arrivalsWithExceptions(calendar, calendarDates, trips,
         stopTimes, stops, serviceDate, nextDay)
@@ -319,20 +340,13 @@ object ArrivalsQuery {
         col("to_stop_id").as("to_stop"),
         coalesce(col("min_transfer_time"), lit(0)).cast("long").as("mtt"))
       .localCheckpoint()
-    var labels = stops.filter(col("stop_id") === originStop)
+    val origin = stops.filter(col("stop_id") === originStop)
       .select(col("run_id"), col("stop_id")).distinct()
       .withColumn("best", lit(departSecs))
       .localCheckpoint()
-    for (_ <- 1 to maxRounds)
-      labels = relaxationRound(labels, legs, foot).localCheckpoint()
-    stops.select(col("run_id"), col("stop_id"), col("stop_name"))
-      .join(labels, Seq("run_id", "stop_id"), "left")
-      .select(col("run_id"), col("stop_id"), col("stop_name"),
-        col("best").as("arr_secs"),
-        when(col("best").isNotNull, dates.gtfsLocalTimeString(
-          dates.gtfsEventTimestamp(to_date(lit(serviceDate)), col("best"))))
-          .as("arr_time"))
-      .orderBy(col("run_id"), col("stop_id"))
+    (1 to maxRounds).scanLeft(origin) { (labels, _) =>
+      relaxationRound(labels, legs, foot).localCheckpoint()
+    }
   }
 
   /** RAPTOR arrival PROFILE: earliest arrival at every reached stop
@@ -351,33 +365,17 @@ object ArrivalsQuery {
                              stops: DataFrame, transfers: DataFrame,
                              originStop: String, serviceDate: String,
                              departSecs: Long,
-                             maxRounds: Int = 4): DataFrame = {
-    val nextDay = java.time.LocalDate.parse(serviceDate).plusDays(1).toString
-    val active = arrivalsWithExceptions(calendar, calendarDates, trips,
-        stopTimes, stops, serviceDate, nextDay)
-      .select(col("run_id"), col("trip_id")).distinct()
-    val legs = suffixLegs(stopTimes, active).localCheckpoint()
-    val foot = transfers
-      .filter(coalesce(col("transfer_type"), lit(0)) =!= 3)
-      .select(col("run_id"), col("from_stop_id").as("from_stop"),
-        col("to_stop_id").as("to_stop"),
-        coalesce(col("min_transfer_time"), lit(0)).cast("long").as("mtt"))
-      .localCheckpoint()
-    var labels = stops.filter(col("stop_id") === originStop)
-      .select(col("run_id"), col("stop_id")).distinct()
-      .withColumn("best", lit(departSecs))
-      .localCheckpoint()
-    val perRound = (1 to maxRounds).map { k =>
-      labels = relaxationRound(labels, legs, foot).localCheckpoint()
-      labels.withColumn("n_legs", lit(k.toLong))
-    }
-    perRound.reduce(_ unionAll _)
+                             maxRounds: Int = 4): DataFrame =
+    raptorRounds(calendar, calendarDates, trips, stopTimes, stops,
+        transfers, originStop, serviceDate, departSecs, maxRounds)
+      .zipWithIndex.tail
+      .map { case (labels, k) => labels.withColumn("n_legs", lit(k.toLong)) }
+      .reduce(_ unionAll _)
       .join(stops.select(col("run_id"), col("stop_id"), col("stop_name")),
         Seq("run_id", "stop_id"))
       .select(col("run_id"), col("stop_id"), col("stop_name"),
         col("n_legs"), col("best").as("arr_secs"))
       .orderBy(col("run_id"), col("stop_id"), col("n_legs"))
-  }
 
   /** Isochrone audit over the [[earliestArrivals]] labels: for each
     * time budget, how many stops are reachable from the origin within

@@ -45,33 +45,37 @@ object GtfsFixture {
     ).toDF("run_id", "service_id", "date", "exception_type")
   }
 
+  /** (run_id, service_id, trip_id) */
+  private val tripRows = Seq(
+    (1L, "WD", "T1"), (1L, "WE", "T2"), (1L, "EXP", "T3"),
+    (1L, "XTRA", "T4"))
+
+  /** (run_id, trip_id, arrival_time, stop_id): arrival_time in seconds
+    * past midnight (may exceed 86400 — the 25:10:00 row exercises the
+    * day-roll).
+    */
+  private val stopTimeRows = Seq(
+    (1L, "T1", 8L * 3600 + 30 * 60 + 15, "S1"),
+    (1L, "T1", 25L * 3600 + 10 * 60, "S2"),
+    (1L, "T2", 10L * 3600, "S1"),
+    (1L, "T2", 10L * 3600 + 10 * 60, "S2"),
+    (1L, "T3", 9L * 3600, "S3"),
+    (1L, "T3", 9L * 3600 + 30 * 60, "S1"),
+    // T4's S2 call makes the S1→S2 timed transfer FEASIBLE on the
+    // XTRA added date (T1 arr 08:30:15 + 300 s ≤ 09:00 ≤ + 1 h)
+    (1L, "T4", 9L * 3600, "S2"),
+    (1L, "T4", 11L * 3600, "S1"))
+
   def trips(s: SparkSession): DataFrame = {
     import s.implicits._
-    Seq(
-      (1L, "WD", "T1"), (1L, "WE", "T2"), (1L, "EXP", "T3"),
-      (1L, "XTRA", "T4"),
-    ).toDF("run_id", "service_id", "trip_id")
+    tripRows.toDF("run_id", "service_id", "trip_id")
   }
 
-  /** arrival_time in seconds past midnight (may exceed 86400 — the
-    * 25:10:00 row exercises the day-roll); departure = arrival + 60s.
-    */
+  /** Departure = arrival + 60 s. */
   def stopTimes(s: SparkSession): DataFrame = {
     import s.implicits._
-    Seq(
-      (1L, "T1", 8L * 3600 + 30 * 60 + 15, "S1"),
-      (1L, "T1", 25L * 3600 + 10 * 60, "S2"),
-      (1L, "T2", 10L * 3600, "S1"),
-      (1L, "T2", 10L * 3600 + 10 * 60, "S2"),
-      (1L, "T3", 9L * 3600, "S3"),
-      (1L, "T3", 9L * 3600 + 30 * 60, "S1"),
-      // T4's S2 call makes the S1→S2 timed transfer FEASIBLE on the
-      // XTRA added date (T1 arr 08:30:15 + 300 s ≤ 09:00 ≤ + 1 h)
-      (1L, "T4", 9L * 3600, "S2"),
-      (1L, "T4", 11L * 3600, "S1"),
-    ).toDF("run_id", "trip_id", "arrival_time", "stop_id")
-      .selectExpr("run_id", "trip_id", "arrival_time", "stop_id",
-        "arrival_time + 60 AS departure_time")
+    stopTimeRows.map { case (r, t, at, stop) => (r, t, at, stop, at + 60) }
+      .toDF("run_id", "trip_id", "arrival_time", "stop_id", "departure_time")
   }
 
   /** Headway expansion fixture: T2 repeats 10:00–11:00 every 20 min
@@ -116,10 +120,8 @@ object GtfsFixture {
     */
   def scaledTrips(s: SparkSession, mult: Int): DataFrame = {
     import s.implicits._
-    val base = Seq((1L, "WD", "T1"), (1L, "WE", "T2"), (1L, "EXP", "T3"),
-      (1L, "XTRA", "T4"))
     (0 until mult).flatMap { i =>
-      base.map { case (r, svc, t) => (r, svc, s"${t}_$i") }
+      tripRows.map { case (r, svc, t) => (r, svc, s"${t}_$i") }
     }.toDF("run_id", "service_id", "trip_id")
   }
 
@@ -130,17 +132,8 @@ object GtfsFixture {
     */
   def scaledStopTimes(s: SparkSession, mult: Int): DataFrame = {
     import s.implicits._
-    val base = Seq(
-      (1L, "T1", 8L * 3600 + 30 * 60 + 15, "S1"),
-      (1L, "T1", 25L * 3600 + 10 * 60, "S2"),
-      (1L, "T2", 10L * 3600, "S1"),
-      (1L, "T2", 10L * 3600 + 10 * 60, "S2"),
-      (1L, "T3", 9L * 3600, "S3"),
-      (1L, "T3", 9L * 3600 + 30 * 60, "S1"),
-      (1L, "T4", 9L * 3600, "S2"),
-      (1L, "T4", 11L * 3600, "S1"))
     (0 until mult).flatMap { i =>
-      base.map { case (r, t, at, stop) =>
+      stopTimeRows.map { case (r, t, at, stop) =>
         (r, s"${t}_$i", at + i % 60, stop, at + i % 60 + 60)
       }
     }.toDF("run_id", "trip_id", "arrival_time", "stop_id", "departure_time")

@@ -1438,19 +1438,15 @@ object Dedup {
     var i = 0
     var done = false
     while (!done && changed > 0 && i < maxIters) {
-      val t0 = System.nanoTime()
       // lazy checkpoint: the flag aggregation below materializes it, so
       // each round is ONE job; lineage still truncates for later rounds
       val next = checkpoint(step(labels), false)
       changed = next
         .agg(coalesce(sum(when(col("canon_id") =!= col("old"), 1L).otherwise(0L)), lit(0L)))
         .first().getLong(0)
-      if (sys.env.get("GRAFT_CC_DEBUG").contains("1"))
-        println(f"-- cc round $i changed=$changed ${(System.nanoTime() - t0) / 1e9}%6.2f s")
       labels = next.select(col("doc_id"), col("canon_id"))
       i += 1
       if (changed > 0 && i >= contractAfter && (i - contractAfter) % contractEvery == 0) {
-        val t1 = System.nanoTime()
         val quotient = edges
           .join(labels.select(col("doc_id").as("a2"), col("canon_id").as("ca")),
             col("a") === col("a2"))
@@ -1475,8 +1471,6 @@ object Dedup {
               coalesce(col("rep"), col("canon_id")).as("canon_id"))
           done = true
         }
-        if (sys.env.get("GRAFT_CC_DEBUG").contains("1"))
-          println(f"-- cc contract i=$i quotient=$m local=${m <= maxLocalEdges} ${(System.nanoTime() - t1) / 1e9}%6.2f s")
       }
     }
     labels

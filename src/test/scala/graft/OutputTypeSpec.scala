@@ -11,15 +11,16 @@ import org.apache.spark.sql.types.DecimalType
   * contract (graft.functions.num): narrow to BIGINT when the value
   * provably fits int64 (loudly — toLongChecked raises on overflow,
   * matching DuckDB's HUGEINT→BIGINT cast), STRING digits when it
-  * genuinely can't.
+  * genuinely can't. Each query is built once for this suite and
+  * [[QueriesSpec]] ([[QueryMemo]]).
   */
 class OutputTypeSpec extends SparkSpec {
 
   private val widest = 18 // anything wider is an internal type escaping
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     test(s"$name emits no DecimalType wider than ($widest,x)") {
-      val offenders = fn(spark, sf).schema.fields.collect {
+      val offenders = QueryMemo(spark, sf, name).schema.fields.collect {
         case f if f.dataType.isInstanceOf[DecimalType] &&
           f.dataType.asInstanceOf[DecimalType].precision > widest =>
           s"${f.name}: ${f.dataType.sql}"

@@ -1,19 +1,17 @@
 package graft
 
-import org.apache.spark.sql.execution.joins.CartesianProductExec
-
 /** Whole-surface smoke + plan audit: every SparkEntry query must execute
   * at sf0.001 and must never plan a true cartesian product (broadcast
   * nested loops against 1-row scalar frames are legitimate; an unbounded
-  * CartesianProductExec at 100 TB is always a bug).
+  * CartesianProductExec at 100 TB is always a bug). Each query is built
+  * once for this suite and [[OutputTypeSpec]] ([[QueryMemo]]).
   */
 class QueriesSpec extends SparkSpec {
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     test(s"$name executes at sf0.001 without a cartesian product") {
-      val df = fn(spark, sf)
-      assert(!planNodes(df).exists(_.isInstanceOf[CartesianProductExec]),
-        df.queryExecution.executedPlan.toString.take(2000))
+      val built = QueryMemo(spark, sf, name)
+      assert(!built.cartesian, built.plan)
     }
   }
 

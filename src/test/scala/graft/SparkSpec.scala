@@ -19,6 +19,11 @@ abstract class SparkSpec extends AnyFunSuite {
     * cache hit from another suite must not hide the nodes under audit).
     */
   def planNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = SparkSpec.planNodes(df)
+}
+
+object SparkSpec {
+  def planNodes(df: org.apache.spark.sql.DataFrame)
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
