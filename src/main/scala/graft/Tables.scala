@@ -137,16 +137,20 @@ object Sessions {
     * FIFO scheduling gives earlier jobs priority and later jobs the
     * leftovers, which is exactly the back-fill behaviour wanted.
     *
-    * Results return in input order and each thunk's result is fully
-    * materialized before this returns, so downstream composition (a
-    * unionAll of the facet frames, a join of the halves) sees exactly
-    * the frames a sequential build would have produced — the plan
-    * shape and results are identical, only the wall-clock overlap
-    * changes. A failure is rethrown only after EVERY thunk has finished,
-    * so no sibling is still running jobs (or reading checkpoint blocks
-    * the caller is about to release) when the caller sees it: the first
-    * failure in input order is thrown, the others ride along as
-    * suppressed exceptions.
+    * Results return in input order once every thunk has returned. How
+    * much of a result is materialized by then is up to its thunk: one
+    * that ends in an eager `localCheckpoint` hands back a materialized
+    * frame; one that ends in a lazy plan (`Dedup.dedupBest`'s
+    * assignments thunk returns a lazy `orderBy` over the CC result)
+    * leaves that last step to the caller's action. Either way
+    * downstream composition (a unionAll of the facet frames, a join of
+    * the halves) sees exactly the frames a sequential build would have
+    * produced — the plan shape and results are identical, only the
+    * wall-clock overlap changes. A failure is rethrown only after
+    * EVERY thunk has finished, so no sibling is still running jobs (or
+    * reading checkpoint blocks the caller is about to release) when the
+    * caller sees it: the first failure in input order is thrown, the
+    * others ride along as suppressed exceptions.
     *
     * The pool is a shared daemon cached pool: threads are reused
     * across calls, nothing outlives the JVM, and nesting (a parallel

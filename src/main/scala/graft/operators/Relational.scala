@@ -37,6 +37,71 @@ object Relational {
   private[operators] def moneySum(c: Column): Column =
     round(sum(dec(c)), 2).cast("double")
 
+  /** Daily revenue in integer cents, `(day: date, cents: long)` — the
+    * series every daily-revenue monitor walks, batch and streaming alike
+    * (the streaming aggregation keeps exactly this key and one long sum).
+    */
+  private[graft] def dailyCents(orders: DataFrame, day: Column,
+                                amount: Column): DataFrame =
+    orders.groupBy(day.cast("date").as("day"))
+      .agg(sum(round(amount * 100).cast("long")).as("cents"))
+
+  /** One step of a Holt recursion in micro-cents: the post-update level
+    * and trend, the PRE-update one-step forecast and its error (0 on the
+    * seed step); Holt–Winters adds the slot it wrote and the slot that
+    * comes due next.
+    */
+  private[graft] final case class HoltStep(level: Long, trend: Long,
+                                           forecast: Long, err: Long,
+                                           season: Long = 0L,
+                                           seasonNext: Long = 0L)
+
+  /** Holt linear-trend recursion over ordered daily cents: dyadic gains
+    * α=1/4, β=1/8, l₀ = y₀, b₀ = 0, truncating integer division — plain
+    * `/` is the repo-wide convention (Spark div, DuckDB //, Java / and
+    * BigInt / all truncate identically, including on negative trends).
+    */
+  private[graft] def holtSteps(cents: Seq[Long]): Vector[HoltStep] = {
+    var l = cents.headOption.getOrElse(0L) * 1000000L
+    var b = 0L
+    cents.iterator.zipWithIndex.map { case (c, i) =>
+      val y = c * 1000000L
+      val forecast = l + b
+      if (i > 0) {
+        val lPrev = l
+        l = (y + 3L * (l + b)) / 4L
+        b = ((l - lPrev) + 7L * b) / 8L
+      }
+      HoltStep(l, b, forecast, if (i == 0) 0L else y - forecast)
+    }.toVector
+  }
+
+  /** Holt–Winters additive recursion (weekly season) over ordered daily
+    * cents: [[holtSteps]] plus a rotating 7-slot seasonal state (γ=1/8,
+    * s ≡ 0 at the seed; the seed step consumes its slot unchanged).
+    */
+  private[graft] def holtWintersSteps(cents: Seq[Long]): Vector[HoltStep] = {
+    var l = cents.headOption.getOrElse(0L) * 1000000L
+    var b = 0L
+    val sea = Array.fill(7)(0L) // rotating: sea(0) is due this step
+    cents.iterator.zipWithIndex.map { case (c, i) =>
+      val y = c * 1000000L
+      val sOld = sea(0)
+      val forecast = l + b + sOld
+      var sNew = sOld
+      if (i > 0) {
+        val lPrev = l
+        l = (y - sOld + 3L * (l + b)) / 4L
+        b = ((l - lPrev) + 7L * b) / 8L
+        sNew = ((y - l) + 7L * sOld) / 8L
+      }
+      for (k <- 0 until 6) sea(k) = sea(k + 1)
+      sea(6) = sNew
+      HoltStep(l, b, forecast, if (i == 0) 0L else y - forecast,
+        sNew, sea(0))
+    }.toVector
+  }
+
   /** Q1-style pricing summary: wide aggregation with map-side combine
     * (reference analog: A1 row-count deltas, generalized).
     */
@@ -934,9 +999,8 @@ object Relational {
     */
   def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val w = Window.orderBy($"day").rowsBetween(-3, 3)
     val det = daily
       .withColumn("n_win", count(lit(1)).over(w))
@@ -1211,9 +1275,8 @@ object Relational {
   def rollingMedianMad(s: SparkSession, dir: String,
                        win: Int = 28): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val w = Window.orderBy($"day").rowsBetween(-(win - 1), 0)
     def med2(arr: String) = // lo + hi middle order statistics, 1-indexed
       s"element_at($arr, CAST((size($arr) + 1) div 2 AS INT))" +
@@ -1274,9 +1337,8 @@ object Relational {
     */
   def maseBacktest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val w = Window.orderBy($"day")
     daily
       .withColumn("n_prev", count(lit(1)).over(w.rowsBetween(-7, -1)))
@@ -1722,9 +1784,8 @@ object Relational {
   def newsvendor(s: SparkSession, dir: String, cu: Long = 3L,
                  co: Long = 1L): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint() // rank pick, mean and both cost scans read it
     val n = daily.count()
     val kRank = (n * cu + (cu + co) - 1) / (cu + co) // ceil(n*cu/(cu+co))
@@ -1822,9 +1883,8 @@ object Relational {
   def ewmaAnomalies(s: SparkSession, dir: String, span: Int = 7,
                     maxLag: Int = 30, alarmBp: Long = 3000L): DataFrame = {
     import s.implicits._
-    val rev = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val rev = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint()
     val wDf = s.createDataFrame(
         ewmaWeightsU(span, maxLag).zipWithIndex
@@ -1858,9 +1918,8 @@ object Relational {
     */
   def cusumShift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val all = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val upTo = Window.orderBy($"day")
@@ -1983,9 +2042,8 @@ object Relational {
     */
   def cusumArl(s: SparkSession, dir: String, b: Int = 64): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val all = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val design = daily
@@ -2136,9 +2194,8 @@ object Relational {
     */
   def runsTest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint()
     val ord = Window.orderBy($"cents", $"day")
     val n0 = daily.count()
@@ -2190,9 +2247,8 @@ object Relational {
   def acfLjungBox(s: SparkSession, dir: String, maxLag: Int = 10): DataFrame = {
     import s.implicits._
     val dec = "decimal(38,0)"
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint()
     val st = daily.agg(count(lit(1)).as("n"), sum($"cents").as("s"))
     val w = Window.orderBy($"day")
@@ -2308,9 +2364,8 @@ object Relational {
     */
   def kruskalWallis(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint()
     val st = daily.groupBy($"cents").agg(count(lit(1)).as("t"))
       .agg(sum($"t").as("n"),
@@ -2359,9 +2414,8 @@ object Relational {
   def pageHinkley(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val dec = "decimal(38,0)"
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val ord = Window.orderBy($"day")
     val w = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
@@ -2405,9 +2459,8 @@ object Relational {
                         b: Int = 6): DataFrame = {
     import s.implicits._
     val dec = "decimal(38,0)"
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val w = Window.orderBy($"day")
     val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pre = daily
@@ -2528,9 +2581,8 @@ object Relational {
   def matrixProfile(s: SparkSession, dir: String, m: Int = 7): DataFrame = {
     import s.implicits._
     val dec = "decimal(38,0)"
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val t0 = daily.agg(min($"day").as("d0"))
     val w = Window.orderBy($"t")
     val wins = daily.crossJoin(broadcast(t0))
@@ -2588,9 +2640,8 @@ object Relational {
   def durbinWatson(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val dec = "decimal(38,0)"
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val t0 = daily.agg(min($"day").as("d0"))
     val d = daily.crossJoin(broadcast(t0))
       .select(datediff($"day", $"d0").cast("long").as("t"), $"cents")
@@ -2716,9 +2767,8 @@ object Relational {
   def theilSenTrend(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val dec = "decimal(38,0)"
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val t0 = daily.agg(min($"day").as("d0"))
     val d = daily.crossJoin(broadcast(t0))
       .select(datediff($"day", $"d0").cast("long").as("t"), $"cents")
@@ -2825,9 +2875,8 @@ object Relational {
     */
   def changepoint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
     val ord = Window.orderBy($"day")
     val all = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
@@ -2913,9 +2962,8 @@ object Relational {
                      maxLag: Int = 30): DataFrame = {
     import s.implicits._
     val dec = "decimal(38,0)"
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint()
     val st = daily.agg(count(lit(1)).as("n"), sum($"cents").as("s"))
     val w = Window.orderBy($"day")
@@ -3014,27 +3062,14 @@ object Relational {
     import s.implicits._
     // day rides as ISO string through the driver fold (date-object
     // decode trips the java8-API seam; the string is unambiguous)
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .select($"day".cast("string").as("day"), $"cents")
       .orderBy($"day")
       .collect().map(r => (r.getString(0), r.getLong(1)))
-    // plain / (truncation toward zero): the repo-wide integer-division
-    // convention — Spark div, DuckDB //, Java / and BigInt / all
-    // truncate identically, including on the negative trend swings
-    var l = daily.head._2 * 1000000L // l_0 = y_0 exactly
-    var b = 0L
-    val rows = daily.zipWithIndex.map { case ((day, cents), i) =>
-      val y = cents * 1000000L
-      val forecast = l + b
-      val err = if (i == 0) 0L else y - forecast
-      if (i > 0) {
-        val lPrev = l
-        l = (y + 3L * (l + b)) / 4L
-        b = ((l - lPrev) + 7L * b) / 8L
-      }
-      (day, cents, l, b, forecast, err)
+    val rows = daily.zip(holtSteps(daily.map(_._2).toSeq)).map {
+      case ((day, cents), h) =>
+        (day, cents, h.level, h.trend, h.forecast, h.err)
     }
     s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1))
       .toDF("day", "cents", "level_u", "trend_u", "forecast_u", "err_u")
@@ -3056,33 +3091,14 @@ object Relational {
     */
   def holtWinters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .select($"day".cast("string").as("day"), $"cents")
       .orderBy($"day")
       .collect().map(r => (r.getString(0), r.getLong(1)))
-    var l = daily.head._2 * 1000000L
-    var b = 0L
-    val sea = Array.fill(7)(0L) // rotating: sea(0) is due this step
-    val rows = daily.zipWithIndex.map { case ((day, cents), i) =>
-      val y = cents * 1000000L
-      val sOld = sea(0)
-      val forecast = l + b + sOld
-      val err = if (i == 0) 0L else y - forecast
-      if (i > 0) {
-        val lPrev = l
-        l = (y - sOld + 3L * (l + b)) / 4L
-        b = ((l - lPrev) + 7L * b) / 8L
-        val sNew = ((y - l) + 7L * sOld) / 8L
-        for (k <- 0 until 6) sea(k) = sea(k + 1)
-        sea(6) = sNew
-      } else {
-        // seed step consumes its slot unchanged (s stays all-zero)
-        for (k <- 0 until 6) sea(k) = sea(k + 1)
-        sea(6) = sOld
-      }
-      (day, cents, l, b, sea(6), forecast, err)
+    val rows = daily.zip(holtWintersSteps(daily.map(_._2).toSeq)).map {
+      case ((day, cents), h) =>
+        (day, cents, h.level, h.trend, h.season, h.forecast, h.err)
     }
     s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1))
       .toDF("day", "cents", "level_u", "trend_u", "season_u",
@@ -3104,9 +3120,8 @@ object Relational {
     */
   def mannKendall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint() // pair join (both sides) + tie rollup read it
     val a = daily.select($"day".as("di"), $"cents".as("xi"))
     val b = daily.select($"day".as("dj"), $"cents".as("xj"))
@@ -3137,9 +3152,8 @@ object Relational {
     */
   def pettittChangepoint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "orders")
-      .groupBy($"o_orderdate".cast("date").as("day"))
-      .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")
       .localCheckpoint() // both sides of the day-pair compare read it
     val b = daily.select($"cents".as("xj"))
     val v = daily.crossJoin(broadcast(b))

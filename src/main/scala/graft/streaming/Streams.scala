@@ -1,9 +1,12 @@
 package graft.streaming
 
 import graft.functions.{dates, geo}
+import graft.operators.Relational
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured Streaming surface (SURVEY.md §2.14 + §7.4 windows).
   *
@@ -74,24 +77,31 @@ object Streams {
         col("text"), toks, col("n_chars")) >= minQuality)
   }
 
-  /** Streaming winnow-index MAINTENANCE — the missing third of the
-    * stored-index lifecycle (batch build → `winnowProbeSink` serve →
-    * THIS keeps the store current as documents arrive): each
-    * micro-batch winnows itself and appends its fingerprints to the
-    * h-bucketed table with the batch builder's exact layout, so the
-    * store stays probe-servable (bucketed, shuffle-free on the index
-    * side) without ever re-winnowing the corpus. Replayed batches
-    * anti-join away on doc_id — a doc's fingerprints enter the store
-    * exactly once no matter how often its batch replays.
-    *
-    * Each append adds a file-set per bucket, so a long-lived store
-    * fragments; the index-appending sinks rewrite it to one file per
-    * bucket every [[CompactEvery]] batches (the `maybeCompact` hook —
-    * [[graft.warehouse.Layout.compactBucketedTable]] between
-    * micro-batches), so the file count stays bounded without a manual
-    * maintenance job. The probe plan (bucketed, shuffle-free) and
-    * results are unchanged; LayoutSpec and StreamingSpec pin both.
+  /** Shared skeleton of the complete-mode monitor sinks: every trigger
+    * collects the WHOLE running aggregate `agg` (complete output mode)
+    * through `collect`, and appends the audit rows `audit` returns for
+    * it to `targetDir` under the column names `cols`. A sink writes
+    * nothing on a trigger where `audit` returns no rows — a trigger can
+    * fire with no data (start-before-input, recovery replay).
     */
+  private def completeMonitor[A <: Product : TypeTag](
+      agg: DataFrame, targetDir: String, cols: Seq[String],
+      collect: DataFrame => Array[Row] = _.collect())(
+      audit: (Array[Row], Long) => Seq[A]): DataStreamWriter[Row] =
+    agg.writeStream.outputMode("complete")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val rows = audit(collect(batch), batchId)
+        if (rows.nonEmpty)
+          batch.sparkSession.createDataFrame(rows).toDF(cols: _*)
+            .write.mode("append").parquet(targetDir)
+        ()
+      }
+
+  /** The cents of a collected (day, cents) daily rollup, in day order. */
+  private def centsByDay(rows: Array[Row]): Seq[Long] =
+    rows.map(r => (r.getDate(0).toString, r.getLong(1))).sortBy(_._1)
+      .map(_._2).toSeq
+
   /** Streaming Holt linear-trend monitor — the stateful twin of
     * [[graft.operators.Relational.holtLinear]]: the complete-mode daily
     * rollup is re-walked per trigger with the batch operator's EXACT
@@ -102,37 +112,15 @@ object Streams {
     * Driver cost is calendar-bounded (one row per day ever seen).
     */
   def holtSink(orders: DataFrame, targetDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val daily = orders
-      .select(col("day").cast("date").as("day"),
-        round(col("amount") * 100).cast("long").as("cents"))
-      .groupBy(col("day")).agg(sum(col("cents")).as("cents"))
-    daily.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val days = batch.collect()
-          .map(r => (r.getDate(0).toString, r.getLong(1))).sortBy(_._1)
-        // a trigger can fire with no data (start-before-input, recovery
-        // replay): skip the row rather than crash the stream on .head
-        if (days.nonEmpty) {
-          var l = days.head._2 * 1000000L; var b = 0L
-          var lastErr = 0L
-          for (i <- days.indices.drop(1)) {
-            val y = days(i)._2 * 1000000L
-            lastErr = y - (l + b)
-            val lp = l
-            l = (y + 3L * (l + b)) / 4L
-            b = ((l - lp) + 7L * b) / 8L
-          }
-          Seq((batchId, days.length.toLong, l, b, l + b, lastErr))
-            .toDF("batch_id", "n_days", "level_u", "trend_u",
-              "forecast_next_u", "last_err_u")
-            .write.mode("append").parquet(targetDir)
-        }
-        ()
-      }
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
+        targetDir, Seq("batch_id", "n_days", "level_u", "trend_u",
+          "forecast_next_u", "last_err_u")) { (rows, batchId) =>
+      val cents = centsByDay(rows)
+      Relational.holtSteps(cents).lastOption.toSeq.map(h =>
+        (batchId, cents.length.toLong, h.level, h.trend, h.level + h.trend,
+          h.err))
+    }
 
   /** Streaming Holt–Winters monitor — the seasonal upgrade of
     * [[holtSink]] and the stateful twin of
@@ -144,41 +132,16 @@ object Streams {
     * over the same days. Driver cost is calendar-bounded.
     */
   def holtWintersSink(orders: DataFrame, targetDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val daily = orders
-      .select(col("day").cast("date").as("day"),
-        round(col("amount") * 100).cast("long").as("cents"))
-      .groupBy(col("day")).agg(sum(col("cents")).as("cents"))
-    daily.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val days = batch.collect()
-          .map(r => (r.getDate(0).toString, r.getLong(1))).sortBy(_._1)
-        if (days.nonEmpty) {
-          var l = days.head._2 * 1000000L; var b = 0L
-          val sea = Array.fill(7)(0L)
-          var lastErr = 0L
-          for (i <- days.indices.drop(1)) {
-            val y = days(i)._2 * 1000000L
-            val sOld = sea(0)
-            lastErr = y - (l + b + sOld)
-            val lp = l
-            l = (y - sOld + 3L * (l + b)) / 4L
-            b = ((l - lp) + 7L * b) / 8L
-            val sNew = ((y - l) + 7L * sOld) / 8L
-            for (k <- 0 until 6) sea(k) = sea(k + 1)
-            sea(6) = sNew
-          }
-          Seq((batchId, days.length.toLong, l, b, sea(0),
-              l + b + sea(0), lastErr))
-            .toDF("batch_id", "n_days", "level_u", "trend_u",
-              "season_next_u", "forecast_next_u", "last_err_u")
-            .write.mode("append").parquet(targetDir)
-        }
-        ()
-      }
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
+        targetDir, Seq("batch_id", "n_days", "level_u", "trend_u",
+          "season_next_u", "forecast_next_u", "last_err_u")) {
+      (rows, batchId) =>
+        val cents = centsByDay(rows)
+        Relational.holtWintersSteps(cents).lastOption.toSeq.map(h =>
+          (batchId, cents.length.toLong, h.level, h.trend, h.seasonNext,
+            h.level + h.trend + h.seasonNext, h.err))
+    }
 
   /** Driver-state guard for the exact-histogram sinks: collect the
     * (…, n) histogram rollup only when its cardinality is within
@@ -227,34 +190,26 @@ object Streams {
       .select(col("event_type"),
         round(col("value") * 10000).cast("long").as("vq"))
       .groupBy(col("event_type"), col("vq")).agg(count(lit(1)).as("n"))
-    hist.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val rows = collectBoundedHist(batch, maxGridCells, "medianSink")
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        if (rows.nonEmpty) {
-          val out = rows.groupBy(_._1).toSeq.sortBy(_._1).map {
-            case (tpe, cells) =>
-              val sorted = cells.sortBy(_._2)
-              val n = sorted.map(_._3).sum
-              // batch-op convention: rows (n+1) div 2 and n div 2 + 1,
-              // mean of the two (equal for odd n)
-              def at(rank: Long): Long = {
-                var cum = 0L
-                sorted.find { c => cum += c._3; cum >= rank }.get._2
-              }
-              val m = (at((n + 1) / 2) / 10000.0 +
-                at(n / 2 + 1) / 10000.0) / 2
-              (batchId, tpe, n,
-                BigDecimal(m).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-                  .toDouble)
+    completeMonitor(hist, targetDir,
+        Seq("batch_id", "event_type", "n_events", "median_value"),
+        collectBoundedHist(_, maxGridCells, "medianSink")) { (rows, batchId) =>
+      rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .groupBy(_._1).toSeq.sortBy(_._1).map { case (tpe, cells) =>
+          val sorted = cells.sortBy(_._2)
+          val n = sorted.map(_._3).sum
+          // batch-op convention: rows (n+1) div 2 and n div 2 + 1,
+          // mean of the two (equal for odd n)
+          def at(rank: Long): Long = {
+            var cum = 0L
+            sorted.find { c => cum += c._3; cum >= rank }.get._2
           }
-          out.toDF("batch_id", "event_type", "n_events", "median_value")
-            .write.mode("append").parquet(targetDir)
+          val m = (at((n + 1) / 2) / 10000.0 +
+            at(n / 2 + 1) / 10000.0) / 2
+          (batchId, tpe, n,
+            BigDecimal(m).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+              .toDouble)
         }
-        ()
-      }
+    }
   }
 
   /** Streaming Shewhart p-chart — the control-chart twin of
@@ -273,36 +228,26 @@ object Streams {
         (col("event_type") === "error").as("is_err"))
       .groupBy(col("day")).agg(count(lit(1)).as("n"),
         sum(when(col("is_err"), 1L).otherwise(0L)).as("x"))
-    daily.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val days = batch.collect()
-          .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2)))
-          .sortBy(_._1)
-        if (days.nonEmpty) {
-          val sx = days.map(_._3).sum; val sn = days.map(_._2).sum
-          val pb = sx.toDouble / sn.toDouble
-          // Spark Round(double): BigDecimal.valueOf + HALF_UP — mirror it
-          def r0(v: Double): Long =
-            BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP)
-              .toLong
-          val rows = days.map { case (day, n, x) =>
-            val sig = math.sqrt(pb * (1.0 - pb) / n.toDouble)
-            val ucl = r0((pb + 3.0 * sig) * 10000)
-            val lcl = math.max(0L, r0((pb - 3.0 * sig) * 10000))
-            val pBp = x * 10000 / n
-            (batchId, day, n, x, pBp, ucl, lcl, pBp > ucl || pBp < lcl)
-          }
-          rows.toSeq.toDF("batch_id", "day", "n", "x", "p_bp", "ucl_bp",
-              "lcl_bp", "ooc")
-            .select(col("batch_id"), to_date(col("day")).as("day"),
-              col("n"), col("x"), col("p_bp"), col("ucl_bp"),
-              col("lcl_bp"), col("ooc"))
-            .write.mode("append").parquet(targetDir)
-        }
-        ()
+    completeMonitor(daily, targetDir, Seq("batch_id", "day", "n", "x",
+        "p_bp", "ucl_bp", "lcl_bp", "ooc")) { (rows, batchId) =>
+      val days = rows
+        .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2)))
+        .sortBy(_._1)
+      val sx = days.map(_._3).sum; val sn = days.map(_._2).sum
+      val pb = sx.toDouble / sn.toDouble
+      // Spark Round(double): BigDecimal.valueOf + HALF_UP — mirror it
+      def r0(v: Double): Long =
+        BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP)
+          .toLong
+      days.toSeq.map { case (day, n, x) =>
+        val sig = math.sqrt(pb * (1.0 - pb) / n.toDouble)
+        val ucl = r0((pb + 3.0 * sig) * 10000)
+        val lcl = math.max(0L, r0((pb - 3.0 * sig) * 10000))
+        val pBp = x * 10000 / n
+        (batchId, java.sql.Date.valueOf(day), n, x, pBp, ucl, lcl,
+          pBp > ucl || pBp < lcl)
       }
+    }
   }
 
   /** Streaming n-gram novelty gate + first-occurrence index — the
@@ -385,6 +330,24 @@ object Streams {
       ()
     }
 
+  /** Streaming winnow-index MAINTENANCE — the missing third of the
+    * stored-index lifecycle (batch build → `winnowProbeSink` serve →
+    * THIS keeps the store current as documents arrive): each
+    * micro-batch winnows itself and appends its fingerprints to the
+    * h-bucketed table with the batch builder's exact layout, so the
+    * store stays probe-servable (bucketed, shuffle-free on the index
+    * side) without ever re-winnowing the corpus. Replayed batches
+    * anti-join away on doc_id — a doc's fingerprints enter the store
+    * exactly once no matter how often its batch replays.
+    *
+    * Each append adds a file-set per bucket, so a long-lived store
+    * fragments; the index-appending sinks rewrite it to one file per
+    * bucket every [[CompactEvery]] batches (the `maybeCompact` hook —
+    * [[graft.warehouse.Layout.compactBucketedTable]] between
+    * micro-batches), so the file count stays bounded without a manual
+    * maintenance job. The probe plan (bucketed, shuffle-free) and
+    * results are unchanged; LayoutSpec and StreamingSpec pin both.
+    */
   def winnowIndexSink(docs: DataFrame, table: String, k: Int = 4,
                       w: Int = 4, nBuckets: Int = 8,
                       compactEvery: Int = CompactEvery)
@@ -476,31 +439,21 @@ object Streams {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val slack = mu / 20
     val h = mu / 4
-    val daily = orders
-      .select(col("day").cast("date").as("day"),
-        round(col("amount") * 100).cast("long").as("cents"))
-      .groupBy(col("day")).agg(sum(col("cents")).as("cents"))
-    daily.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val days = batch.collect()
-          .map(r => (r.getDate(0).toString, r.getLong(1))).sortBy(_._1)
-        var pHi = 0L; var minPHi = 0L; var pLo = 0L; var maxPLo = 0L
-        var sHi = 0L; var sLo = 0L; var alarmDays = 0L
-        days.foreach { case (_, cents) =>
-          pHi += cents - mu - slack; minPHi = math.min(minPHi, pHi)
-          pLo += cents - mu + slack; maxPLo = math.max(maxPLo, pLo)
-          sHi = pHi - minPHi; sLo = maxPLo - pLo
-          if (sHi >= h || sLo >= h) alarmDays += 1
-        }
-        Seq((batchId, days.length.toLong, sHi, sLo, alarmDays,
-            sHi >= h || sLo >= h))
-          .toDF("batch_id", "n_days", "s_hi", "s_lo", "alarm_days",
-            "alarm_now")
-          .write.mode("append").parquet(targetDir)
-        ()
+    completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
+        targetDir, Seq("batch_id", "n_days", "s_hi", "s_lo", "alarm_days",
+          "alarm_now")) { (rows, batchId) =>
+      val days = centsByDay(rows)
+      var pHi = 0L; var minPHi = 0L; var pLo = 0L; var maxPLo = 0L
+      var sHi = 0L; var sLo = 0L; var alarmDays = 0L
+      days.foreach { cents =>
+        pHi += cents - mu - slack; minPHi = math.min(minPHi, pHi)
+        pLo += cents - mu + slack; maxPLo = math.max(maxPLo, pLo)
+        sHi = pHi - minPHi; sLo = maxPLo - pLo
+        if (sHi >= h || sLo >= h) alarmDays += 1
       }
+      Seq((batchId, days.length.toLong, sHi, sLo, alarmDays,
+        sHi >= h || sLo >= h))
+    }
   }
 
   /** Conformal coverage gate: the streaming application of
@@ -540,37 +493,25 @@ object Streams {
     * exactly.
     */
   def pageHinkleySink(orders: DataFrame, targetDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val daily = orders
-      .select(col("day").cast("date").as("day"),
-        round(col("amount") * 100).cast("long").as("cents"))
-      .groupBy(col("day")).agg(sum(col("cents")).as("cents"))
-    daily.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val days = batch.collect()
-          .map(r => (r.getDate(0).toString, r.getLong(1))).sortBy(_._1)
-        var sCum = BigInt(0); var m = BigInt(0)
-        var mMin = BigInt(0); var mMax = BigInt(0)
-        var phHi = BigInt(0); var phLo = BigInt(0)
-        var mbar = BigInt(0); var t = 0L; var alarmDays = 0L
-        days.foreach { case (_, cents) =>
-          t += 1; sCum += cents
-          mbar = sCum * 1000000 / t
-          m += BigInt(cents) * 1000000 - mbar
-          mMin = mMin.min(m); mMax = mMax.max(m)
-          phHi = m - mMin; phLo = mMax - m
-          if (phHi >= mbar / 4 || phLo >= mbar / 4) alarmDays += 1
-        }
-        Seq((batchId, t, phHi.toLong, phLo.toLong, mbar.toLong,
-            alarmDays, phHi >= mbar / 4 || phLo >= mbar / 4))
-          .toDF("batch_id", "n_days", "ph_hi", "ph_lo", "mbar_u",
-            "alarm_days", "alarm_now")
-          .write.mode("append").parquet(targetDir)
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
+        targetDir, Seq("batch_id", "n_days", "ph_hi", "ph_lo", "mbar_u",
+          "alarm_days", "alarm_now")) { (rows, batchId) =>
+      var sCum = BigInt(0); var m = BigInt(0)
+      var mMin = BigInt(0); var mMax = BigInt(0)
+      var phHi = BigInt(0); var phLo = BigInt(0)
+      var mbar = BigInt(0); var t = 0L; var alarmDays = 0L
+      centsByDay(rows).foreach { cents =>
+        t += 1; sCum += cents
+        mbar = sCum * 1000000 / t
+        m += BigInt(cents) * 1000000 - mbar
+        mMin = mMin.min(m); mMax = mMax.max(m)
+        phHi = m - mMin; phLo = mMax - m
+        if (phHi >= mbar / 4 || phLo >= mbar / 4) alarmDays += 1
       }
-  }
+      Seq((batchId, t, phHi.toLong, phLo.toLong, mbar.toLong,
+        alarmDays, phHi >= mbar / 4 || phLo >= mbar / 4))
+    }
 
   /** Streaming cluster maintenance: a similarity-pair stream folds into
     * a continuously-maintained ASSIGNMENTS view (doc_id → canon_id) via
@@ -585,29 +526,11 @@ object Streams {
     */
   def clusterMaintenanceSink(pairs: DataFrame, viewDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val root = new org.apache.hadoop.fs.Path(viewDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val resolved = resolveCdcMeta(fs, root)
-      val committedId = resolved.map(_._2).getOrElse(-1L)
-      if (batchId > committedId) {
-        val stored = resolved
-          .map { case (d, _) => spark.read.parquet(
-            new org.apache.hadoop.fs.Path(root, d).toString) }
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("canon_id",
-                org.apache.spark.sql.types.LongType)))))
-          .localCheckpoint() // merge joins it three times
-        val next = graft.operators.Dedup.mergeIntoAssignments(
-          stored, batch.select(col("doc_a"), col("doc_b")))
-        commitVersionedSnapshot(spark, fs, root, batchId, next)
-      }
-      ()
+    versionedSnapshot(pairs, viewDir,
+        StructType.fromDDL("doc_id BIGINT, canon_id BIGINT")) { (stored, batch) =>
+      graft.operators.Dedup.mergeIntoAssignments(
+        stored.localCheckpoint(), // merge joins it three times
+        batch.select(col("doc_a"), col("doc_b")))
     }
 
   /** Robust-baseline drift monitor: the streaming twin of
@@ -622,41 +545,30 @@ object Streams {
     */
   def robustBaselineSink(orders: DataFrame, targetDir: String,
                          win: Int = 28)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val daily = orders
-      .select(col("day").cast("date").as("day"),
-        round(col("amount") * 100).cast("long").as("cents"))
-      .groupBy(col("day")).agg(sum(col("cents")).as("cents"))
-    daily.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val days = batch.collect()
-          .map(r => (r.getDate(0).toString, r.getLong(1))).sortBy(_._1)
-        def m2(xs: Seq[Long]): Long = {
-          val s = xs.sorted
-          s((s.length + 1) / 2 - 1) + s((s.length + 2) / 2 - 1)
-        }
-        var alarmDays = 0L; var lastAlarm = false
-        var lastMed2 = 0L; var lastMad4 = 0L
-        for (i <- (win - 1) until days.length) {
-          val w = (i - win + 1 to i).map(k => days(k)._2)
-          val med2 = m2(w)
-          val mad4 = m2(w.map(v => math.abs(2 * v - med2)))
-          val a = math.abs(days(i)._2 * 2 - med2) * 2 > mad4 * 3
-          if (a) alarmDays += 1
-          if (i == days.length - 1) {
-            lastAlarm = a; lastMed2 = med2; lastMad4 = mad4
-          }
-        }
-        Seq((batchId, days.length.toLong, lastMed2, lastMad4,
-            alarmDays, lastAlarm))
-          .toDF("batch_id", "n_days", "med2", "mad4", "alarm_days",
-            "alarm_now")
-          .write.mode("append").parquet(targetDir)
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
+        targetDir, Seq("batch_id", "n_days", "med2", "mad4", "alarm_days",
+          "alarm_now")) { (rows, batchId) =>
+      val days = centsByDay(rows)
+      def m2(xs: Seq[Long]): Long = {
+        val s = xs.sorted
+        s((s.length + 1) / 2 - 1) + s((s.length + 2) / 2 - 1)
       }
-  }
+      var alarmDays = 0L; var lastAlarm = false
+      var lastMed2 = 0L; var lastMad4 = 0L
+      for (i <- (win - 1) until days.length) {
+        val w = (i - win + 1 to i).map(days)
+        val med2 = m2(w)
+        val mad4 = m2(w.map(v => math.abs(2 * v - med2)))
+        val a = math.abs(days(i) * 2 - med2) * 2 > mad4 * 3
+        if (a) alarmDays += 1
+        if (i == days.length - 1) {
+          lastAlarm = a; lastMed2 = med2; lastMad4 = mad4
+        }
+      }
+      Seq((batchId, days.length.toLong, lastMed2, lastMad4,
+        alarmDays, lastAlarm))
+    }
 
   /** Exact-KS drift monitor: the streaming twin of `Events.ksDrift` —
     * a STATEFUL running per-value histogram on the 1e-4 quantization
@@ -677,30 +589,25 @@ object Streams {
     val hist = values
       .select(round(col("value") * 10000).cast("long").as("vq"))
       .groupBy(col("vq")).agg(count(lit(1)).as("n"))
-    hist.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val cur = collectBoundedHist(batch, maxGridCells, "ksDriftSink")
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val n2 = cur.values.sum
-        val refMap = refCounts.toMap
-        var c1 = 0L; var c2 = 0L; var dNum = 0L
-        (refMap.keySet ++ cur.keySet).toSeq.sorted.foreach { v =>
-          c1 += refMap.getOrElse(v, 0L)
-          c2 += cur.getOrElse(v, 0L)
-          dNum = math.max(dNum, math.abs(c1 * n2 - c2 * n1))
-        }
-        val dBp = if (n2 > 0) dNum * 10000 / (n1 * n2) else 0L
-        val crit = if (n2 > 0)
-          math.round(13581.0 *
-            math.sqrt((n1 + n2).toDouble / (n1 * n2).toDouble))
-        else Long.MaxValue
-        Seq((batchId, n2, dNum, dBp, crit, n2 > 0 && dBp >= crit))
-          .toDF("batch_id", "n_cur", "d_num", "d_bp", "crit_bp", "drifted")
-          .write.mode("append").parquet(targetDir)
-        ()
+    completeMonitor(hist, targetDir,
+        Seq("batch_id", "n_cur", "d_num", "d_bp", "crit_bp", "drifted"),
+        collectBoundedHist(_, maxGridCells, "ksDriftSink")) { (rows, batchId) =>
+      val cur = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val n2 = cur.values.sum
+      val refMap = refCounts.toMap
+      var c1 = 0L; var c2 = 0L; var dNum = 0L
+      (refMap.keySet ++ cur.keySet).toSeq.sorted.foreach { v =>
+        c1 += refMap.getOrElse(v, 0L)
+        c2 += cur.getOrElse(v, 0L)
+        dNum = math.max(dNum, math.abs(c1 * n2 - c2 * n1))
       }
+      val dBp = if (n2 > 0) dNum * 10000 / (n1 * n2) else 0L
+      val crit = if (n2 > 0)
+        math.round(13581.0 *
+          math.sqrt((n1 + n2).toDouble / (n1 * n2).toDouble))
+      else Long.MaxValue
+      Seq((batchId, n2, dNum, dBp, crit, n2 > 0 && dBp >= crit))
+    }
   }
 
   /** Energy-distance drift monitor — the streaming twin of
@@ -720,12 +627,11 @@ object Streams {
     val hist = values
       .select(round(col("value") * 10000).cast("long").as("vq"))
       .groupBy(col("vq")).agg(count(lit(1)).as("n"))
-    hist.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val cur = collectBoundedHist(batch, maxGridCells, "energyDriftSink")
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    completeMonitor(hist, targetDir, Seq("batch_id", "n_cur", "a_u", "b_u",
+        "c_u", "energy_u", "drifted"),
+        collectBoundedHist(_, maxGridCells, "energyDriftSink")) {
+      (rows, batchId) =>
+        val cur = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
         val ref = refCounts.toMap
         val n1 = BigInt(ref.values.sum); val n2 = BigInt(cur.values.sum)
         if (n2 > 0) {
@@ -751,17 +657,8 @@ object Streams {
           val cU = (syy * 100 / (n2 * n2)).toLong
           val e = 2 * aU - bU - cU
           Seq((batchId, n2.toLong, aU, bU, cU, e, e >= alarmU))
-            .toDF("batch_id", "n_cur", "a_u", "b_u", "c_u", "energy_u",
-              "drifted")
-            .write.mode("append").parquet(targetDir)
-        } else {
-          Seq((batchId, 0L, 0L, 0L, 0L, 0L, false))
-            .toDF("batch_id", "n_cur", "a_u", "b_u", "c_u", "energy_u",
-              "drifted")
-            .write.mode("append").parquet(targetDir)
-        }
-        ()
-      }
+        } else Seq((batchId, 0L, 0L, 0L, 0L, 0L, false))
+    }
   }
 
   /** Benford first-digit monitor: the streaming twin of
@@ -784,13 +681,11 @@ object Streams {
       .select(substring(floor(col("amount")).cast("decimal(18,0)")
         .cast("string"), 1, 1).cast("int").as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
-    digits.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
+    completeMonitor(digits, targetDir,
+        Seq("batch_id", "n_orders", "chi2_u", "skew_alarm")) {
+      (rows, batchId) =>
         // the COMPLETE running histogram at this trigger (<= 9 rows)
-        val counts = batch.collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val counts = rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
         val nTot = counts.values.sum
         val chi2U = (1 to 9).map { d =>
           val nObs = counts.getOrElse(d, 0L)
@@ -800,10 +695,7 @@ object Streams {
             .setScale(0, java.math.RoundingMode.HALF_UP).longValue
         }.sum
         Seq((batchId, nTot, chi2U, chi2U >= alarmChi2U))
-          .toDF("batch_id", "n_orders", "chi2_u", "skew_alarm")
-          .write.mode("append").parquet(targetDir)
-        ()
-      }
+    }
   }
 
   /** Gopher-rule ingest gate: the streaming twin of
@@ -1015,13 +907,6 @@ object Streams {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Sliding window: 1h span every 15min — same state-bounding shape. */
-  def slidingTypeCounts(events: DataFrame, lateness: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n_events"))
-
   /** Idempotent warehouse merge sink — the streaming twin of the
     * loader's PK-dedup append (K1 / ON CONFLICT DO NOTHING): each
     * micro-batch anti-joins the target on the key before appending, so
@@ -1032,21 +917,30 @@ object Streams {
   def idempotentMergeSink(stream: DataFrame, targetDir: String, keyCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
       // dedup WITHIN the batch too — an at-least-once source can deliver
       // the same key twice in one micro-batch, which the target anti-join
       // alone would let through
-      val batchDedup = batch.dropDuplicates(keyCol)
-      // target-existence probe must go through Hadoop's FileSystem so it
-      // works on HDFS/S3 paths too, not just the local filesystem
-      val hPath = new org.apache.hadoop.fs.Path(targetDir)
-      val exists = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
-      val fresh =
-        if (!exists) batchDedup
-        else batchDedup.join(spark.read.parquet(targetDir).select(keyCol), Seq(keyCol), "left_anti")
-      fresh.write.mode("append").parquet(targetDir)
-      ()
+      appendAbsent(batch.dropDuplicates(keyCol), targetDir, keyCol)
     }
+
+  /** Shared append of the idempotent sinks (ON CONFLICT DO NOTHING):
+    * append the `rows` whose `keys` the parquet store at `targetDir`
+    * does not hold yet, so a replayed micro-batch cannot duplicate a
+    * stored row. Dedup WITHIN a batch stays with the caller.
+    */
+  private def appendAbsent(rows: DataFrame, targetDir: String,
+                           keys: String*): Unit = {
+    val spark = rows.sparkSession
+    // target-existence probe must go through Hadoop's FileSystem so it
+    // works on HDFS/S3 paths too, not just the local filesystem
+    val hPath = new org.apache.hadoop.fs.Path(targetDir)
+    val exists = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
+    val fresh =
+      if (!exists) rows
+      else rows.join(spark.read.parquet(targetDir).select(keys.map(col): _*),
+        keys, "left_anti")
+    fresh.write.mode("append").parquet(targetDir)
+  }
 
   /** Streaming tokenize→pack→shard sink: the foreachBatch twin of the
     * batch assembly chain (`TextOps.bpeEncode` →
@@ -1165,22 +1059,6 @@ object Streams {
         (col("rival_t") - col("intra_t")).as("margin_t"))
   }
 
-  /** Continuously-maintained snapshot from a CDC change stream — the
-    * streaming half of `Relational.applyCdc`: each micro-batch of
-    * (doc_id, status, fp) changes folds into a versioned snapshot under
-    * `snapshotDir`, readers resolving the current version through a tiny
-    * VERSIONED meta pointer `_cdc_meta_<batchId>` written AFTER the new
-    * snapshot commits. Meta versions are resolved by max batch id (only
-    * dirs carrying Spark's `_SUCCESS` commit marker count) and older
-    * versions are deleted only after the new one is fully visible — so
-    * there is no delete-then-rename window: a crash at ANY point leaves
-    * at least one committed meta resolving to a complete snapshot.
-    * Replayed micro-batches (id ≤ committed) are skipped whole, and the
-    * per-batch apply drops EVERY changed key from the base before
-    * re-adding upserts, so even a crash between data and meta commits
-    * replays to the identical snapshot (idempotent apply, not just
-    * idempotent skip).
-    */
   private val CdcMetaPrefix = "_cdc_meta_"
 
   /** Resolve the committed (snapshot dir, batch id) under `root`: the
@@ -1210,9 +1088,9 @@ object Streams {
     * resolution still picks the new one and the next batch re-retires
     * the stragglers.
     *
-    * `retain` is the version-retention knob: 1 (default) keeps only
-    * the just-committed version — the tightest footprint; N > 1 keeps
-    * the N newest, which is what a deployment with concurrent
+    * `retain` is the version-retention knob: 1 (the sinks' default)
+    * keeps only the just-committed version — the tightest footprint;
+    * N > 1 keeps the N newest, which is what a deployment with concurrent
     * snapshot readers wants (a reader that resolved the previous
     * pointer an instant before this commit keeps a complete snapshot
     * under its feet) and what version-diff debugging reads. Resolution
@@ -1223,7 +1101,7 @@ object Streams {
       spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, batchId: Long,
-      next: DataFrame, retain: Int = 1): Unit = {
+      next: DataFrame, retain: Int): Unit = {
     val vdir = s"snap_$batchId"
     next.write.mode("overwrite")
       .parquet(new org.apache.hadoop.fs.Path(root, vdir).toString)
@@ -1246,38 +1124,61 @@ object Streams {
       .foreach(p => fs.delete(p, true))
   }
 
+  /** Shared skeleton of the versioned-snapshot sinks: resolve the
+    * committed version under `dir`, skip a replayed batch id ≤ the
+    * committed one whole, read the stored frame (an empty one of
+    * `schema` before the first commit), fold the micro-batch in with
+    * `step(stored, batch)` and commit the result through
+    * [[commitVersionedSnapshot]], keeping the newest `retain` versions.
+    */
+  private def versionedSnapshot(stream: DataFrame, dir: String,
+                                schema: StructType, retain: Int = 1)(
+      step: (DataFrame, DataFrame) => DataFrame): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val spark = batch.sparkSession
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val resolved = resolveCdcMeta(fs, root)
+      if (batchId > resolved.map(_._2).getOrElse(-1L)) {
+        val stored = resolved
+          .map { case (d, _) => spark.read.parquet(
+            new org.apache.hadoop.fs.Path(root, d).toString) }
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[Row], schema))
+        commitVersionedSnapshot(spark, fs, root, batchId,
+          step(stored, batch), retain)
+      }
+      ()
+    }
+
+  /** Continuously-maintained snapshot from a CDC change stream — the
+    * streaming half of `Relational.applyCdc`: each micro-batch of
+    * (doc_id, status, fp) changes folds into a versioned snapshot under
+    * `snapshotDir`, readers resolving the current version through a tiny
+    * VERSIONED meta pointer `_cdc_meta_<batchId>` written AFTER the new
+    * snapshot commits. Meta versions are resolved by max batch id (only
+    * dirs carrying Spark's `_SUCCESS` commit marker count) and older
+    * versions are deleted only after the new one is fully visible — so
+    * there is no delete-then-rename window: a crash at ANY point leaves
+    * at least one committed meta resolving to a complete snapshot.
+    * Replayed micro-batches (id ≤ committed) are skipped whole, and the
+    * per-batch apply drops EVERY changed key from the base before
+    * re-adding upserts, so even a crash between data and meta commits
+    * replays to the identical snapshot (idempotent apply, not just
+    * idempotent skip).
+    */
   def cdcApplySink(changes: DataFrame, snapshotDir: String,
                    retainVersions: Int = 1)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(snapshotDir)
-      val fs = root.getFileSystem(hconf)
-      val resolved = resolveCdcMeta(fs, root)
-      val cur = resolved.map(_._1)
-      val committedId = resolved.map(_._2).getOrElse(-1L)
-      if (batchId > committedId) {
+    versionedSnapshot(changes, snapshotDir,
+        StructType.fromDDL("doc_id BIGINT, fp STRING"), retainVersions) {
+      (base, batch) =>
         val b = batch.select(col("doc_id"), col("status"), col("fp"))
           .localCheckpoint() // key anti-join + upsert leg both read it
-        val base = cur
-          .map(d => spark.read.parquet(
-            new org.apache.hadoop.fs.Path(root, d).toString))
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("fp",
-                org.apache.spark.sql.types.StringType)))))
-        val next = base
+        base
           .join(b.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
           .unionByName(b.filter(col("status").isin("added", "modified"))
             .select(col("doc_id"), col("fp")))
-        commitVersionedSnapshot(spark, fs, root, batchId, next,
-          retainVersions)
-      }
-      ()
     }
 
   /** Streaming incremental view maintenance — the foreachBatch twin of
@@ -1298,48 +1199,26 @@ object Streams {
   def ivmAggSink(deltas: DataFrame, viewDir: String,
                  retainVersions: Int = 1)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltas.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val root = new org.apache.hadoop.fs.Path(viewDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val resolved = resolveCdcMeta(fs, root)
-      val committedId = resolved.map(_._2).getOrElse(-1L)
-      if (batchId > committedId) {
-        val dec = "decimal(38,0)"
-        val dAgg = batch
-          .groupBy(col("key"))
-          .agg(sum(col("sign").cast("long")).as("n_d"),
-            sum((col("sign") * col("cents")).cast("long")).as("s_d"),
-            sum((col("sign").cast(dec) * col("cents") * col("cents")))
-              .as("s2_d"))
-        val view = resolved
-          .map { case (d, _) => spark.read.parquet(
-            new org.apache.hadoop.fs.Path(root, d).toString) }
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("key",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("n",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("s",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("s2",
-                org.apache.spark.sql.types.DecimalType(38, 0))))))
-        val next = view.join(dAgg, Seq("key"), "full_outer")
-          .select(col("key"),
-            (coalesce(col("n"), lit(0L)) + coalesce(col("n_d"), lit(0L)))
-              .as("n"),
-            (coalesce(col("s"), lit(0L)) + coalesce(col("s_d"), lit(0L)))
-              .as("s"),
-            (coalesce(col("s2"), lit(0L).cast(dec))
-              + coalesce(col("s2_d"), lit(0L).cast(dec)))
-              .cast(dec).as("s2"))
-          .filter(col("n") > 0L)
-        commitVersionedSnapshot(spark, fs, root, batchId, next,
-          retainVersions)
-      }
-      ()
+    versionedSnapshot(deltas, viewDir,
+        StructType.fromDDL("key BIGINT, n BIGINT, s BIGINT, s2 DECIMAL(38,0)"),
+        retainVersions) { (view, batch) =>
+      val dec = "decimal(38,0)"
+      val dAgg = batch
+        .groupBy(col("key"))
+        .agg(sum(col("sign").cast("long")).as("n_d"),
+          sum((col("sign") * col("cents")).cast("long")).as("s_d"),
+          sum((col("sign").cast(dec) * col("cents") * col("cents")))
+            .as("s2_d"))
+      view.join(dAgg, Seq("key"), "full_outer")
+        .select(col("key"),
+          (coalesce(col("n"), lit(0L)) + coalesce(col("n_d"), lit(0L)))
+            .as("n"),
+          (coalesce(col("s"), lit(0L)) + coalesce(col("s_d"), lit(0L)))
+            .as("s"),
+          (coalesce(col("s2"), lit(0L).cast(dec))
+            + coalesce(col("s2_d"), lit(0L).cast(dec)))
+            .cast(dec).as("s2"))
+        .filter(col("n") > 0L)
     }
 
   /** Read the cdcApplySink-maintained snapshot through its meta pointer. */
@@ -1378,17 +1257,8 @@ object Streams {
         Seq("band", "sig"))
       .select(col("new_doc"), col("index_doc"))
     cand.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
-      val fresh = batch.dropDuplicates("new_doc", "index_doc")
-      val hPath = new org.apache.hadoop.fs.Path(targetDir)
-      val exists = hPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(hPath)
-      val out =
-        if (!exists) fresh
-        else fresh.join(spark.read.parquet(targetDir),
-          Seq("new_doc", "index_doc"), "left_anti")
-      out.write.mode("append").parquet(targetDir)
-      ()
+      appendAbsent(batch.dropDuplicates("new_doc", "index_doc"), targetDir,
+        "new_doc", "index_doc")
     }
   }
 
@@ -1409,7 +1279,6 @@ object Streams {
                       k: Int = 4, w: Int = 4, minShared: Long = 2L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
       val cand = graft.operators.TextOps
         .winnowSelectedFrom(batch.select(col("doc_id"), col("text")), k, w)
         .select(col("doc_id").as("new_doc"), col("h")).distinct()
@@ -1417,16 +1286,7 @@ object Streams {
         .groupBy(col("new_doc"), col("index_doc"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= minShared)
-      val hPath = new org.apache.hadoop.fs.Path(targetDir)
-      val exists = hPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(hPath)
-      val out =
-        if (!exists) cand
-        else cand.join(spark.read.parquet(targetDir)
-            .select(col("new_doc"), col("index_doc")),
-          Seq("new_doc", "index_doc"), "left_anti")
-      out.write.mode("append").parquet(targetDir)
-      ()
+      appendAbsent(cand, targetDir, "new_doc", "index_doc")
     }
 
   /** Embedding index serving path — the vector twin of
@@ -1468,32 +1328,11 @@ object Streams {
         round(vectors.cosineSimilarity(col("va"), col("vb")), 4).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
     verified.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
-      val fresh = batch.dropDuplicates("new_vec", "index_vec")
-      val hPath = new org.apache.hadoop.fs.Path(targetDir)
-      val exists = hPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(hPath)
-      val out =
-        if (!exists) fresh
-        else fresh.join(spark.read.parquet(targetDir),
-          Seq("new_vec", "index_vec"), "left_anti")
-      out.write.mode("append").parquet(targetDir)
-      ()
+      appendAbsent(batch.dropDuplicates("new_vec", "index_vec"), targetDir,
+        "new_vec", "index_vec")
     }
   }
 
-  /** PQ ADC serving sink — the compressed-index query path as a stream:
-    * arriving query vectors are sliced into sub-vectors in-row, each
-    * batch builds its (query × m × ncodes) lookup tables against the
-    * broadcast codebook, and the STORED codes table
-    * (`Similarity.writePqIndex`) is scanned once per micro-batch to
-    * score every indexed vector by m integer lookups — the corpus-sized
-    * assignment work happened at index build; per-batch cost is
-    * O(batch × codes scan), the ADC serving contract. Top-k per query
-    * (integer-exact ADC order, vec_id ties) lands in the result store;
-    * replayed batches are anti-joined out by query id, so at-least-once
-    * delivery yields exactly-one result set per query.
-    */
   /** Keyword-search serving stream riding the STORED term index — the
     * text twin of [[pqServeSink]]: each arriving query row carries
     * (query_id, terms array); per micro-batch the bucketed term index is
@@ -1534,15 +1373,7 @@ object Streams {
           .withColumn("rk", row_number().over(byQuery))
           .filter(col("rk") <= k)
           .select(col("query_id"), col("rk"), col("doc_id"), col("score"))
-        val hPath = new org.apache.hadoop.fs.Path(targetDir)
-        val exists = hPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration).exists(hPath)
-        val out =
-          if (!exists) topk
-          else topk.join(
-            spark.read.parquet(targetDir).select(col("query_id")).distinct(),
-            Seq("query_id"), "left_anti")
-        out.write.mode("append").parquet(targetDir)
+        appendAbsent(topk, targetDir, "query_id")
       }
       ()
     }
@@ -1594,20 +1425,24 @@ object Streams {
           .withColumn("rk", row_number().over(byQuery))
           .filter(col("rk") <= k)
           .select(col("qid"), col("rk"), col("vec_id"), col("cos_sim"))
-        val hPath = new org.apache.hadoop.fs.Path(targetDir)
-        val exists = hPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration).exists(hPath)
-        val out =
-          if (!exists) topk
-          else topk.join(
-            spark.read.parquet(targetDir).select(col("qid")).distinct(),
-            Seq("qid"), "left_anti")
-        out.write.mode("append").parquet(targetDir)
+        appendAbsent(topk, targetDir, "qid")
       }
       ()
     }
   }
 
+  /** PQ ADC serving sink — the compressed-index query path as a stream:
+    * arriving query vectors are sliced into sub-vectors in-row, each
+    * batch builds its (query × m × ncodes) lookup tables against the
+    * broadcast codebook, and the STORED codes table
+    * (`Similarity.writePqIndex`) is scanned once per micro-batch to
+    * score every indexed vector by m integer lookups — the corpus-sized
+    * assignment work happened at index build; per-batch cost is
+    * O(batch × codes scan), the ADC serving contract. Top-k per query
+    * (integer-exact ADC order, vec_id ties) lands in the result store;
+    * replayed batches are anti-joined out by query id, so at-least-once
+    * delivery yields exactly-one result set per query.
+    */
   def pqServeSink(queries: DataFrame, dir: String, targetDir: String,
                   k: Int = 10, m: Int = 8, ncodes: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -1638,16 +1473,7 @@ object Streams {
         .withColumn("rk", row_number().over(byQuery))
         .filter(col("rk") <= k)
         .select(col("qid"), col("rk"), col("vec_id"), col("adc"))
-      val hPath = new org.apache.hadoop.fs.Path(targetDir)
-      val exists = hPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(hPath)
-      val out =
-        if (!exists) topk
-        else topk.join(
-          spark.read.parquet(targetDir).select(col("qid")).distinct(),
-          Seq("qid"), "left_anti")
-      out.write.mode("append").parquet(targetDir)
-      ()
+      appendAbsent(topk, targetDir, "qid")
     }
   }
 

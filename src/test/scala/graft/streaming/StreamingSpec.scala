@@ -258,12 +258,18 @@ class StreamingSpec extends SparkSpec {
     val q = Streams.indexProbeSink(
         input.toDF().toDF("doc_id", "text"), index, dst)
       .option("checkpointLocation", ckpt).start()
-    batchDocs.grouped(math.max(batchDocs.length / 2, 1)).foreach { g =>
+    val groups = batchDocs.grouped(math.max(batchDocs.length / 2, 1)).toSeq
+    groups.foreach { g =>
       input.addData(g); q.processAllAvailable()
     }
+    val stored = spark.read.parquet(dst)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // replay: the first group again must leave the stored rows unchanged
+    input.addData(groups.head); q.processAllAvailable()
     q.stop()
     val streamed = spark.read.parquet(dst)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(streamed === stored, "a replayed group changed the stored pairs")
     val batch = graft.operators.Dedup.incrementalLshPairs(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(streamed === batch)
@@ -927,13 +933,20 @@ class StreamingSpec extends SparkSpec {
     val q = Streams.winnowProbeSink(
         input.toDF().toDF("doc_id", "text"), index, dst)
       .option("checkpointLocation", ckpt).start()
-    streamDocs.grouped(math.max(streamDocs.length / 2, 1)).foreach { g =>
+    val groups = streamDocs.grouped(math.max(streamDocs.length / 2, 1)).toSeq
+    groups.foreach { g =>
       input.addData(g); q.processAllAvailable()
     }
+    val stored = spark.read.parquet(dst)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    // replay: the first group again must leave the stored rows unchanged
+    input.addData(groups.head); q.processAllAvailable()
     q.stop()
     val streamed = spark.read.parquet(dst)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq
+    assert(streamed === stored, "a replayed group changed the stored pairs")
     // batch reference: the same winnowed fingerprints joined batch-side
     val sel = graft.operators.TextOps
       .winnowSelectedFrom(graft.Tables(spark, sf, "documents"), 4, 4)
@@ -1230,6 +1243,17 @@ class StreamingSpec extends SparkSpec {
         allPairs.toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(after === full)
+    // a redelivered batch id <= committed (fresh query, batch id 0) must
+    // be skipped whole — a pair that would add a doc leaves the view as is
+    val replay = MemoryStream[(Long, Long)](spark)
+    val q2 = Streams.clusterMaintenanceSink(
+      replay.toDF().toDF("doc_a", "doc_b"), dir).start()
+    replay.addData((allPairs.head._1, 1000000000L))
+    q2.processAllAvailable()
+    q2.stop()
+    val replayed = Streams.readCdcSnapshot(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(replayed === after, "stale batch mutated the committed view")
   }
 
   test("cdcApplySink folds change batches into a snapshot; stale ids skip") {
