@@ -14,15 +14,18 @@ import org.apache.spark.sql.execution.ExplainMode
   * visible at this stage.
   */
 object Plans {
-  /** The formatted plan of `df` with each `#<n>` expression id and each
-    * `plan_id=<n>` exchange id renumbered by order of first appearance (a
-    * type suffix such as `L` stays), so two builds of one query dump the
-    * same text: both ids come from JVM-wide counters that every earlier
-    * or concurrent build advances.
+  /** The formatted plan of `df` with each `#<n>` expression id, each
+    * `plan_id=<n>` exchange id and each `RDD[<n>]` id renumbered by order
+    * of first appearance (a type suffix such as `L` stays), and each RDD
+    * call site's `.scala:<n>` source line masked to `.scala:N`, so two
+    * builds of one query dump the same text: the ids come from JVM-wide
+    * counters that every earlier or concurrent build advances, and the
+    * line moves whenever code above the call site does.
     */
   def dump(df: DataFrame): String =
-    Seq("#", "plan_id=").foldLeft(
-      df.queryExecution.explainString(ExplainMode.fromString("formatted"))) {
+    Seq("#", "plan_id=", "RDD[").foldLeft(
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        .replaceAll("\\.scala:\\d+", ".scala:N")) {
       (text, prefix) =>
         val ids = scala.collection.mutable.Map.empty[String, Int]
         (java.util.regex.Pattern.quote(prefix) + "(\\d+)").r.replaceAllIn(text,

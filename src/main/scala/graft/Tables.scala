@@ -82,6 +82,21 @@ object Tables {
   * AQE coalesces to data-proportional numbers anyway).
   */
 object Sessions {
+  /** The engine's session on `local[cores]`.
+    *
+    * Generated-class cache: Spark compiles each distinct generated class
+    * (a whole-stage pipeline, a projection) with Janino and keeps it in
+    * one JVM-wide cache of `spark.sql.codegen.cache.maxEntries` classes,
+    * a static conf read once, when codegen is first used in the JVM. The
+    * default of 100 is smaller than the engine's working set: one pass of
+    * perfbench's `queries` workload compiles about 300 classes, so
+    * each pass evicted what the next one needed and every plan shape was
+    * compiled again. A full `graft.Verify` at sf0.01 compiles 5659
+    * distinct classes (11151 compilations at 100); 8192 holds them with
+    * headroom. Each costs about 7.4 KB of metaspace: that Verify run ended
+    * at 232.6 MB of metaspace with nothing evicted, 191.5 MB at 100, so a
+    * full cache is about 60 MB.
+    */
   def local(cores: String, shufflePartitions: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -94,6 +109,7 @@ object Sessions {
       // stops 32-way shuffles of kilobytes
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()

@@ -24,9 +24,11 @@ import scala.jdk.CollectionConverters._
   *
   * Warehouse layout: one parquet dataset per table under `warehouseDir/
   * <table>`, partitioned by (provider_id, run_id) — the provenance pair
-  * the reference stamps on every row. Partition pruning turns per-feed
-  * queries into single-partition scans at any corpus size; appends of a
-  * new run never rewrite old partitions.
+  * the reference stamps on every row. Each append writes into its run's
+  * partition directory (`provider_id=…/run_id=…`), so the data files
+  * hold the feed columns only and the directory names carry the pair.
+  * Partition pruning turns per-feed queries into single-partition scans
+  * at any corpus size; appends of a new run never rewrite old partitions.
   *
   * Idempotency (reference ON CONFLICT DO NOTHING + run anti-join):
   *  - run level: candidate (provider_id, run_date) pairs are anti-joined
@@ -39,13 +41,16 @@ import scala.jdk.CollectionConverters._
   *
   * Scale posture: the driver-side work is zip member extraction (one
   * pass per archive) and parsing each member's header line. Each member
-  * then costs one distributed job: CSV scan, conform, CHECK split and
-  * partitioned write, with the appended and quarantined counts observed
-  * on that write instead of recounted. The PK anti-join runs only where
-  * rows can collide: for run-scoped keys against this run's own
-  * partition, which exists only after a failed earlier attempt; for
-  * `agency` against the provider's rows. The members of one load wave
-  * load concurrently; the waves keep the reference's member order.
+  * then costs one distributed job: CSV scan, conform, CHECK split and the
+  * write into the run's partition directory, with the appended and
+  * quarantined counts observed on that write instead of recounted. No run
+  * id reaches that job's generated code, so every run after the first
+  * reuses the classes Spark compiled for it (see [[Sessions.local]]).
+  * The PK anti-join runs only where rows can collide: for run-scoped keys
+  * against this run's own partition, which exists only after a failed
+  * earlier attempt; for `agency` against the provider's rows. The members
+  * of one load wave load concurrently; the waves keep the reference's
+  * member order.
   *
   * On the read side, `table()` reads every table with the schema it was
   * written with, so building a frame starts no job: no parquet schema
@@ -231,58 +236,73 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
   }
 
   /** Appends the rows of `rows` whose key `pk` is not stored in table `t`
-    * yet, in one partitioned write; returns how many landed. Keys compare
-    * null-safe. A key holding `run_id` can only collide inside this run's
-    * partition, which exists only if a failed earlier attempt wrote to
-    * it, so the anti-join reads that partition alone and is skipped when
-    * it is absent; any other key is checked against the provider's rows.
+    * yet, in one write into this run's partition directory; returns how
+    * many landed. The rows hold the feed columns only, so the write's
+    * generated code is the same for every run. Keys compare null-safe; a
+    * provenance column a key names is added as a literal for the
+    * anti-join only. A key holding `run_id` can only collide inside this
+    * run's partition, which exists only if a failed earlier attempt wrote
+    * to it, so the anti-join reads that partition alone and is skipped
+    * when it is absent; any other key is checked against the provider's
+    * rows.
     */
-  private def appendNew(t: String, schema: StructType, rows: DataFrame, pk: Seq[String],
+  private def appendNew(t: String, rows: DataFrame, pk: Seq[String],
                         runId: Int, providerId: String): Long = {
-    val createsTable = !exists(t)
+    val root = Paths.get(tablePath(t))
+    val providerDir = root.resolve(getPartitionPathString("provider_id", providerId))
+    val part = providerDir.resolve(getPartitionPathString("run_id", runId.toString))
+    // the outermost directory this write creates; None when the partition exists
+    val created = Seq(root, providerDir, part).find(!Files.exists(_))
     val stored =
       if (pk.contains("run_id")) {
-        val part = Paths.get(tablePath(t), getPartitionPathString("provider_id", providerId),
-          getPartitionPathString("run_id", runId.toString))
-        if (!Files.exists(part)) None
-        else Some(spark.read.schema(schema).option("basePath", tablePath(t)).parquet(part.toString))
-      } else if (createsTable) None
-      else Some(spark.read.schema(schema).parquet(tablePath(t)).filter($"provider_id" === providerId))
+        if (created.isDefined) None
+        else Some(spark.read.schema(schemaOf(t).get).option("basePath", root.toString)
+          .parquet(part.toString))
+      } else if (created.contains(root)) None
+      else Some(table(t).filter($"provider_id" === providerId))
     val fresh = stored.fold(rows) { s =>
-      rows.join(s, pk.map(c => rows(c) <=> s(c)).reduce(_ && _), "left_anti")
+      val keyed = rows.withColumns(Map("provider_id" -> lit(providerId), "run_id" -> lit(runId))
+        .filter { case (c, _) => pk.contains(c) })
+      keyed.join(s, pk.map(c => keyed(c) <=> s(c)).reduce(_ && _), "left_anti")
+        .select(rows.columns.toIndexedSeq.map(col): _*)
     }
+    val before = if (created.isEmpty) entries(part) else Set.empty[Path]
     val landed = Observation()
     fresh.observe(landed, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("provider_id", "run_id")
-      .parquet(tablePath(t))
+      .write.mode(SaveMode.Append).parquet(part.toString)
     val n = landed.get("rows").asInstanceOf[Long]
-    // a write of no rows leaves a directory with no schema to read back;
-    // table() must keep returning the canonical empty frame instead
-    if (n == 0 && createsTable) deleteTree(Paths.get(tablePath(t)))
+    // a write of no rows still leaves a schema-only file: remove what it
+    // added, so the partition directories stay those of the rows landed
+    // and table() keeps returning the canonical empty frame for a table
+    // that never landed a row
+    if (n == 0) created match {
+      case Some(dir) => deleteTree(dir)
+      case None => (entries(part) -- before).foreach(p => Files.delete(p))
+    }
     n
   }
 
-  /** Idempotent per-table append: prepend provenance, CHECK-split, PK
-    * anti-join against existing rows, partitioned write. Returns
+  private def entries(dir: Path): Set[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.toSet finally listing.close()
+  }
+
+  /** Idempotent per-table append: CHECK-split, PK anti-join against
+    * existing rows, write into the run's partition directory. Returns
     * (appended, quarantined) row counts. One write job; a second one
     * lands the rejects only when the CHECK split quarantined rows.
     */
   def appendTable(tableName: String, conformed: DataFrame,
                   runId: Int, providerId: String): (Long, Long) = {
-    val withProv = conformed
-      .withColumn("run_id", lit(runId))
-      .withColumn("provider_id", lit(providerId))
     val check = GtfsSchemas.checkConstraints.getOrElse(tableName, lit(true))
     val allColumns = "run_id" +: conformed.columns.toSeq
     val pk = GtfsSchemas.primaryKeys.getOrElse(tableName, allColumns)
     val split = Observation()
-    val ok = withProv.observe(split, count_if(!check).as("rejected")).filter(check)
-    val n = appendNew(tableName, storedSchema(tableName), ok, pk, runId, providerId)
+    val ok = conformed.observe(split, count_if(!check).as("rejected")).filter(check)
+    val n = appendNew(tableName, ok, pk, runId, providerId)
     val qn = split.get("rejected").asInstanceOf[Long]
     if (qn > 0)
-      appendNew(s"${tableName}_rejects", storedSchema(tableName), withProv.filter(!check),
-        allColumns, runId, providerId)
+      appendNew(s"${tableName}_rejects", conformed.filter(!check), allColumns, runId, providerId)
     (n, qn)
   }
 
@@ -305,8 +325,11 @@ class GtfsLoad(spark: SparkSession, warehouseDir: String) {
     val ledger = runLedger()
     if (newRuns(Seq((providerId, runDate)), ledger).isEmpty) return None
     val checksum = archiveChecksum(zipPath)
+    // the stored checksums are compared on the driver: a filter on this
+    // archive's checksum would inline it into generated code, compiling a
+    // new class for every archive
     if (exists("archive_manifest") &&
-      table("archive_manifest").filter(col("checksum") === checksum).count() > 0)
+      table("archive_manifest").select($"checksum").as[Long].collect().contains(checksum))
       return None
     registerProvider(providerId)
     val runId = nextRunId(ledger)

@@ -1,6 +1,10 @@
 package graft.gtfs
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -9,6 +13,7 @@ import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end loader + arrivals golden tests on the FIXTURES.md synthetic
   * feed: dirty headers, ""->NULL, unknown members, checksum dedup,
@@ -230,6 +235,52 @@ class GtfsLoadSpec extends SparkSpec {
       .select($"run_id").as[Int].collect().toSeq === Seq(2))
     assert(loader.table("stops").filter($"provider_id" === "0815" && $"run_id" === 2)
       .count() === 4)
+  }
+
+  /** The fixture feed dated 2019-03-0`n`, with `n` extra stops so that
+    * every such archive is distinct content.
+    */
+  private def nthFeed(n: Int): (String, String) = {
+    val stops = feedMembers("stops.txt") + (1 to n).map(i => s"\nX$i,,Extra $i,,52.$i,13.$i").mkString
+    (s"2019-03-0$n", zipOf(feedMembers.updated("stops.txt", stops), s"2019-03-0$n.zip").getAbsolutePath)
+  }
+
+  private def loadRuns(loader: GtfsLoad, runs: Int*): Unit = runs.foreach { n =>
+    val (date, zip) = nthFeed(n)
+    assert(loader.loadArchive("vbb", date, zip).isDefined, date)
+  }
+
+  test("a third run compiles no class: no run id reaches the load's generated code") {
+    val (loader, _) = freshLoader()
+    loadRuns(loader, 1, 2)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    loadRuns(loader, 3)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0)
+    assert(loader.table("stops").filter($"run_id" === 3).count() === 6)
+  }
+
+  test("warehouse layout: one provider_id=/run_id= directory per landed run, " +
+       "data files holding the feed columns only") {
+    val (loader, wh) = freshLoader()
+    loadRuns(loader, 1, 2)
+    val dataFiles = Files.walk(wh.toPath).iterator().asScala.map(_.toFile)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
+    def rel(dir: File) = wh.toPath.relativize(dir.toPath).toString
+    val runTables = Seq("calendar", "calendar_dates", "routes", "stop_times",
+      "stop_times_rejects", "stops", "trips")
+    // run 2's agency row is already stored, so run 2 has no agency partition
+    assert(dataFiles.map(f => rel(f.getParentFile)).toSet ===
+      Set("agency/provider_id=vbb/run_id=1", "archive_manifest", "provider", "run") ++
+        (for (t <- runTables; r <- 1 to 2) yield s"$t/provider_id=vbb/run_id=$r"))
+    dataFiles.filter(f => rel(f).contains("/provider_id=")).foreach { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HPath(f.toURI), spark.sparkContext.hadoopConfiguration))
+      val (columns, rows) = try (reader.getFileMetaData.getSchema.getFields.asScala
+        .map(_.getName).toSeq, reader.getRecordCount) finally reader.close()
+      val table = rel(f).takeWhile(_ != '/').stripSuffix("_rejects")
+      assert(columns === GtfsSchemas.feedTables(table).fieldNames.toSeq, rel(f))
+      assert(rows > 0, s"${rel(f)} holds no row")
+    }
   }
 
   test("table() starts no job and matches Spark's schema inference") {
