@@ -717,15 +717,18 @@ object SparkEntry {
 
   /** V-optimal histogram oracle: DP levels and the backtrack chain
     * unrolled from the same bucket count as Relational.vOptimalHistogram.
+    * `pre`, `c_l` and `dp_l` are each read twice, and DuckDB inlines a
+    * CTE that is not MATERIALIZED, so without it the plan doubles per
+    * level.
     */
   private def vOptOracle(b: Int): String = {
     val sse = "(p.cs2 - q.cs2) - CAST(p.cs - q.cs AS HUGEINT)" +
       " * (p.cs - q.cs) // (p.i - q.i)"
     val levels = (2 to b).map { l =>
-      s"""c$l AS (SELECT p.i AS i, d.i AS j, d.v + $sse AS cost
-           FROM dp${l - 1} d JOIN p0 q ON q.i = d.i
+      s"""c$l AS MATERIALIZED (SELECT p.i AS i, d.i AS j,
+           d.v + $sse AS cost FROM dp${l - 1} d JOIN p0 q ON q.i = d.i
            JOIN p ON p.i > d.i),
-         dp$l AS (SELECT i, min(cost) AS v FROM c$l GROUP BY i),
+         dp$l AS MATERIALIZED (SELECT i, min(cost) AS v FROM c$l GROUP BY i),
          arg$l AS (SELECT c.i, min(c.j) AS am FROM c$l c
            JOIN dp$l m ON m.i = c.i AND c.cost = m.v GROUP BY c.i)"""
     }.mkString(",\n         ")
@@ -739,7 +742,7 @@ object SparkEntry {
     s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
          CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
            AS cents FROM orders GROUP BY 1),
-       pre AS (SELECT day,
+       pre AS MATERIALIZED (SELECT day,
          CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i,
          CAST(sum(cents) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
            PRECEDING AND CURRENT ROW) AS BIGINT) AS cs,

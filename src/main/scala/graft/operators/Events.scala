@@ -891,6 +891,27 @@ object Events {
       .orderBy($"event_type")
   }
 
+  /** The frozen reference histogram `Streams.psiDriftSink` probes: bin
+    * counts of the reference window (day ≤ 15), collected driver-side —
+    * nBins pairs, the bounded artifact a monitor ships to the edge.
+    */
+  def psiReferenceCounts(s: SparkSession, dir: String,
+                         binWidth: Double = 50.0,
+                         nBins: Int = 10): Seq[(Long, Long)] = {
+    import s.implicits._
+    Tables(s, dir, "events")
+      .filter(dayofmonth($"ts") <= 15)
+      .select(psiBin($"value", binWidth, nBins).as("bin"))
+      .groupBy($"bin").agg(count(lit(1)).as("n"))
+      .as[(Long, Long)].collect().toSeq.sortBy(_._1)
+  }
+
+  /** The PSI bin of `value`: fixed width, the last bin open-ended. A
+    * negative value gets a negative bin, which no spine row matches. */
+  private[graft] def psiBin(value: Column, binWidth: Double,
+                            nBins: Int): Column =
+    least(lit(nBins - 1), floor(value / binWidth)).cast("long")
+
   /** Population Stability Index between the stream's first and second
     * half-month — THE production drift metric (credit-scoring lineage,
     * now standard for feature/label drift monitors): bucket `value`
@@ -904,54 +925,47 @@ object Events {
     * each bin's contribution is an exact integer product of the two, so
     * the total is order-free. One scan + a 10-row rollup.
     */
-  /** The frozen reference histogram `Streams.psiDriftSink` probes: bin
-    * counts of the reference window (day ≤ 15), collected driver-side —
-    * nBins pairs, the bounded artifact a monitor ships to the edge.
-    */
-  def psiReferenceCounts(s: SparkSession, dir: String,
-                         binWidth: Double = 50.0,
-                         nBins: Int = 10): Seq[(Long, Long)] = {
-    import s.implicits._
-    Tables(s, dir, "events")
-      .filter(dayofmonth($"ts") <= 15)
-      .select(least(lit(nBins - 1), floor($"value" / binWidth)).cast("long")
-        .as("bin"))
-      .groupBy($"bin").agg(count(lit(1)).as("n"))
-      .as[(Long, Long)].collect().toSeq.sortBy(_._1)
-  }
-
   def psiDrift(s: SparkSession, dir: String, binWidth: Double = 50.0,
                nBins: Int = 10): DataFrame = {
     import s.implicits._
     val binned = Tables(s, dir, "events")
       .select(
         (dayofmonth($"ts") <= 15).as("is_ref"),
-        least(lit(nBins - 1), floor($"value" / binWidth)).cast("long")
-          .as("bin"))
+        psiBin($"value", binWidth, nBins).as("bin"))
       .groupBy($"bin")
       .agg(sum(when($"is_ref", 1L).otherwise(0L)).as("ref_n"),
         sum(when(!$"is_ref", 1L).otherwise(0L)).as("cur_n"))
-    // all bins present even when empty on both sides (smoothing still
-    // assigns them mass): union the bin spine, fill zeros
-    val spine = s.range(nBins).select($"id".as("bin"))
-    val cells = spine.join(binned, Seq("bin"), "left")
-      .select($"bin", coalesce($"ref_n", lit(0L)).as("ref_n"),
-        coalesce($"cur_n", lit(0L)).as("cur_n"))
-      .localCheckpoint() // totals + per-bin scan both read it
-    val tot = cells.agg(sum($"ref_n").as("rt"), sum($"cur_n").as("ct"))
+    psiDriftCore(psiCells(binned, nBins)
+        .localCheckpoint(), // totals + per-bin scan both read it
+      nBins)
+      .orderBy($"bin")
+  }
+
+  /** Bins 0 until `nBins` of a `(bin, ref_n, cur_n)` rollup, empty ones
+    * zero-filled (smoothing still assigns them mass), others dropped. */
+  private[graft] def psiCells(binned: DataFrame, nBins: Int): DataFrame = {
+    val spine = binned.sparkSession.range(nBins).select(col("id").as("bin"))
+    spine.join(binned, Seq("bin"), "left")
+      .select(col("bin"), coalesce(col("ref_n"), lit(0L)).as("ref_n"),
+        coalesce(col("cur_n"), lit(0L)).as("cur_n"))
+  }
+
+  /** [[psiDrift]] over its [[psiCells]]: each bin's `contrib` in 1e-10
+    * units — shared with the streaming `psiDriftSink`. */
+  private[graft] def psiDriftCore(cells: DataFrame, nBins: Int): DataFrame = {
+    val tot = cells.agg(sum(col("ref_n")).as("rt"), sum(col("cur_n")).as("ct"))
     cells.crossJoin(broadcast(tot))
       .withColumn("p_ref_bp",
         expr(s"(ref_n + 1) * 10000 div (rt + $nBins)"))
       .withColumn("p_cur_bp",
         expr(s"(cur_n + 1) * 10000 div (ct + $nBins)"))
       .withColumn("lnr_u",
-        round(log((($"ref_n" + 1) * ($"ct" + nBins)).cast("double") /
-          (($"cur_n" + 1) * ($"rt" + nBins)).cast("double")) * 1e6)
+        round(log(((col("ref_n") + 1) * (col("ct") + nBins)).cast("double") /
+          ((col("cur_n") + 1) * (col("rt") + nBins)).cast("double")) * 1e6)
           .cast("long"))
-      .withColumn("contrib", ($"p_ref_bp" - $"p_cur_bp") * $"lnr_u")
-      .select($"bin", $"ref_n", $"cur_n", $"p_ref_bp", $"p_cur_bp",
-        $"lnr_u", $"contrib")
-      .orderBy($"bin")
+      .withColumn("contrib", (col("p_ref_bp") - col("p_cur_bp")) * col("lnr_u"))
+      .select(col("bin"), col("ref_n"), col("cur_n"), col("p_ref_bp"),
+        col("p_cur_bp"), col("lnr_u"), col("contrib"))
   }
 
   /** Robust location/scale per event type: 5%/95% winsorized mean plus
@@ -1139,44 +1153,55 @@ object Events {
     * a stated convention, not drift). The grid is value-bounded, so
     * the window is audit-sized at any event volume.
     */
-  def energyDistance(s: SparkSession, dir: String): DataFrame = {
+  def energyDistance(s: SparkSession, dir: String): DataFrame =
+    energyDistanceCore(valueHalfCells(s, dir)
+      .localCheckpoint()) // totals and the prefix walk both read it
+
+  /** `(vq, c1, c2)` value-grid counts of the early and late halves. */
+  private def valueHalfCells(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val dec = "decimal(38,0)"
-    val cells = valueHalves(s, dir)
+    valueHalves(s, dir)
       .groupBy($"vq")
       .agg(sum(when($"early", 1L).otherwise(0L)).as("c1"),
         sum(when(!$"early", 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint() // totals and the prefix walk both read it
-    val tot = cells.agg(sum($"c1").as("n1"), sum($"c2").as("n2"),
-      sum(($"c1" * $"vq").cast(dec)).as("s1t"),
-      sum(($"c2" * $"vq").cast(dec)).as("s2t"))
-    val cum = Window.orderBy($"vq")
+  }
+
+  /** [[energyDistance]] over `(vq, c1, c2)` cells, one row — shared with
+    * the streaming `energyDriftSink`. Needs both samples non-empty. */
+  private[graft] def energyDistanceCore(cells: DataFrame): DataFrame = {
+    val dec = "decimal(38,0)"
+    val vq = col("vq")
+    val tot = cells.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
+      sum((col("c1") * vq).cast(dec)).as("s1t"),
+      sum((col("c2") * vq).cast(dec)).as("s2t"))
+    val cum = Window.orderBy(vq)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     def absSumAround(cPre: Column, sPre: Column, cTot: Column,
                      sTot: Column): Column =
-      cPre.cast("decimal(38,0)") * $"vq" - sPre +
-        (sTot - sPre) - (cTot - cPre).cast("decimal(38,0)") * $"vq"
+      cPre.cast("decimal(38,0)") * vq - sPre +
+        (sTot - sPre) - (cTot - cPre).cast("decimal(38,0)") * vq
     cells
-      .withColumn("cc1", sum($"c1").over(cum))
-      .withColumn("ss1", sum(($"c1" * $"vq").cast(dec)).over(cum))
-      .withColumn("cc2", sum($"c2").over(cum))
-      .withColumn("ss2", sum(($"c2" * $"vq").cast(dec)).over(cum))
+      .withColumn("cc1", sum(col("c1")).over(cum))
+      .withColumn("ss1", sum((col("c1") * vq).cast(dec)).over(cum))
+      .withColumn("cc2", sum(col("c2")).over(cum))
+      .withColumn("ss2", sum((col("c2") * vq).cast(dec)).over(cum))
       .crossJoin(broadcast(tot))
-      .withColumn("xy", $"c2".cast(dec) *
-        absSumAround($"cc1", $"ss1", $"n1", $"s1t"))
-      .withColumn("xx", $"c1".cast(dec) *
-        absSumAround($"cc1", $"ss1", $"n1", $"s1t"))
-      .withColumn("yy", $"c2".cast(dec) *
-        absSumAround($"cc2", $"ss2", $"n2", $"s2t"))
-      .agg(max($"n1").as("n_early"), max($"n2").as("n_late"),
-        sum($"xy").as("sxy"), sum($"xx").as("sxx"),
-        sum($"yy").as("syy"))
+      .withColumn("xy", col("c2").cast(dec) *
+        absSumAround(col("cc1"), col("ss1"), col("n1"), col("s1t")))
+      .withColumn("xx", col("c1").cast(dec) *
+        absSumAround(col("cc1"), col("ss1"), col("n1"), col("s1t")))
+      .withColumn("yy", col("c2").cast(dec) *
+        absSumAround(col("cc2"), col("ss2"), col("n2"), col("s2t")))
+      .agg(max(col("n1")).as("n_early"), max(col("n2")).as("n_late"),
+        sum(col("xy")).as("sxy"), sum(col("xx")).as("sxx"),
+        sum(col("yy")).as("syy"))
       // vq is 1e-4 value units → ×100 lands the means in micro units
       .withColumn("a_u", expr("sxy * 100 div (n_early * n_late)"))
       .withColumn("b_u", expr("sxx * 100 div (n_early * n_early)"))
       .withColumn("c_u", expr("syy * 100 div (n_late * n_late)"))
-      .select($"n_early", $"n_late", $"a_u", $"b_u", $"c_u",
-        (lit(2L) * $"a_u" - $"b_u" - $"c_u").as("energy_u"))
+      .select(col("n_early"), col("n_late"), col("a_u"), col("b_u"),
+        col("c_u"),
+        (lit(2L) * col("a_u") - col("b_u") - col("c_u")).as("energy_u"))
   }
 
   /** The frozen reference distribution `Streams.ksDriftSink` probes:
@@ -1219,30 +1244,34 @@ object Events {
     * the single global cumulative window runs over the tiny (value,
     * counts) rollup, not the raw events.
     */
-  def ksDrift(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val cells = valueHalves(s, dir)
-      .groupBy($"vq")
-      .agg(sum(when($"early", 1L).otherwise(0L)).as("c1"),
-        sum(when(!$"early", 1L).otherwise(0L)).as("c2"))
-    val cum = Window.orderBy($"vq")
+  def ksDrift(s: SparkSession, dir: String): DataFrame =
+    ksDriftCore(valueHalfCells(s, dir))
+
+  /** [[ksDrift]] over `(vq, c1, c2)` cells, one row — shared with the
+    * streaming `ksDriftSink`. Needs both samples non-empty. */
+  private[graft] def ksDriftCore(cells: DataFrame): DataFrame = {
+    val cum = Window.orderBy(col("vq"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     cells
-      .select($"vq", sum($"c1").over(cum).as("f1"), sum($"c2").over(cum).as("f2"))
-      .crossJoin(broadcast(cells.agg(sum($"c1").as("n1"), sum($"c2").as("n2"))))
-      .withColumn("gap", abs($"f1" * $"n2" - $"f2" * $"n1"))
-      .withColumn("dmax", max($"gap").over(all))
-      .agg(max($"n1").as("n_early"), max($"n2").as("n_late"),
-        max($"gap").as("d_num"),
-        min(when($"gap" === $"dmax", $"vq")).as("at_vq"))
+      .select(col("vq"), sum(col("c1")).over(cum).as("f1"),
+        sum(col("c2")).over(cum).as("f2"))
+      .crossJoin(broadcast(
+        cells.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))))
+      .withColumn("gap", abs(col("f1") * col("n2") - col("f2") * col("n1")))
+      .withColumn("dmax", max(col("gap")).over(all))
+      .agg(max(col("n1")).as("n_early"), max(col("n2")).as("n_late"),
+        max(col("gap")).as("d_num"),
+        min(when(col("gap") === col("dmax"), col("vq"))).as("at_vq"))
       .withColumn("d_bp", expr("d_num * 10000 div (n_early * n_late)"))
       .withColumn("crit_bp",
-        round(lit(13581.0) * sqrt(($"n_early" + $"n_late").cast("double")
-          / ($"n_early" * $"n_late").cast("double"))).cast("long"))
-      .select($"n_early", $"n_late", $"d_num", $"at_vq", $"d_bp",
-        $"crit_bp", ($"d_bp" >= $"crit_bp").as("drifted"))
+        round(lit(13581.0) * sqrt((col("n_early") + col("n_late"))
+          .cast("double") / (col("n_early") * col("n_late")).cast("double")))
+          .cast("long"))
+      .select(col("n_early"), col("n_late"), col("d_num"), col("at_vq"),
+        col("d_bp"), col("crit_bp"),
+        (col("d_bp") >= col("crit_bp")).as("drifted"))
   }
 
   /** Quantile (rank) transform of event values per type: each distinct
@@ -1407,10 +1436,7 @@ object Events {
     */
   def emdDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cells = valueHalves(s, dir)
-      .groupBy($"vq")
-      .agg(sum(when($"early", 1L).otherwise(0L)).as("c1"),
-        sum(when(!$"early", 1L).otherwise(0L)).as("c2"))
+    val cells = valueHalfCells(s, dir)
     val ord = Window.orderBy($"vq")
     val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cells
@@ -1561,23 +1587,34 @@ object Events {
     */
   def pChart(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables(s, dir, "events")
-      .groupBy($"ts".cast("date").as("day"))
+    pChartCore(dailyErrors(Tables(s, dir, "events"), $"ts")
+      .localCheckpoint()) // pooled rate re-aggregates it
+      .orderBy($"day")
+  }
+
+  /** Daily event and error counts `(day: date, n, x)` — the p-chart
+    * rollup, batch and streaming alike. */
+  private[graft] def dailyErrors(events: DataFrame, day: Column): DataFrame =
+    events.groupBy(day.cast("date").as("day"))
       .agg(count(lit(1)).as("n"),
-        sum(when($"event_type" === "error", 1L).otherwise(0L)).as("x"))
-      .localCheckpoint() // pooled rate re-aggregates it
-    val pooled = daily.agg(sum($"x").as("sx"), sum($"n").as("sn"))
-    val pb = $"sx".cast("double") / $"sn".cast("double")
-    val sig = sqrt(pb * (lit(1.0) - pb) / $"n".cast("double"))
+        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("x"))
+
+  /** [[pChart]] over a [[dailyErrors]] rollup — shared with the
+    * streaming `pChartSink`. */
+  private[graft] def pChartCore(daily: DataFrame): DataFrame = {
+    val pooled = daily.agg(sum(col("x")).as("sx"), sum(col("n")).as("sn"))
+    val pb = col("sx").cast("double") / col("sn").cast("double")
+    val sig = sqrt(pb * (lit(1.0) - pb) / col("n").cast("double"))
     daily.crossJoin(broadcast(pooled))
       .withColumn("p_bp", expr("x * 10000 div n"))
       .withColumn("ucl_bp",
         round((pb + lit(3.0) * sig) * 10000).cast("long"))
       .withColumn("lcl_bp",
         greatest(lit(0L), round((pb - lit(3.0) * sig) * 10000).cast("long")))
-      .withColumn("ooc", $"p_bp" > $"ucl_bp" || $"p_bp" < $"lcl_bp")
-      .select($"day", $"n", $"x", $"p_bp", $"ucl_bp", $"lcl_bp", $"ooc")
-      .orderBy($"day")
+      .withColumn("ooc",
+        col("p_bp") > col("ucl_bp") || col("p_bp") < col("lcl_bp"))
+      .select(col("day"), col("n"), col("x"), col("p_bp"), col("ucl_bp"),
+        col("lcl_bp"), col("ooc"))
   }
 
   def kaplanMeier(s: SparkSession, dir: String): DataFrame = {

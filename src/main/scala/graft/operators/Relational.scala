@@ -1275,23 +1275,29 @@ object Relational {
   def rollingMedianMad(s: SparkSession, dir: String,
                        win: Int = 28): DataFrame = {
     import s.implicits._
-    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
-      $"o_totalprice")
-    val w = Window.orderBy($"day").rowsBetween(-(win - 1), 0)
+    rollingMedianMadCore(dailyCents(Tables(s, dir, "orders"),
+      $"o_orderdate", $"o_totalprice"), win).orderBy($"day")
+  }
+
+  /** [[rollingMedianMad]] over a `(day, cents)` frame, one row per day
+    * with a full window — shared with the streaming `robustBaselineSink`. */
+  private[graft] def rollingMedianMadCore(daily: DataFrame,
+                                          win: Int): DataFrame = {
+    val w = Window.orderBy(col("day")).rowsBetween(-(win - 1), 0)
     def med2(arr: String) = // lo + hi middle order statistics, 1-indexed
       s"element_at($arr, CAST((size($arr) + 1) div 2 AS INT))" +
         s" + element_at($arr, CAST((size($arr) + 2) div 2 AS INT))"
     daily
-      .withColumn("arr", array_sort(collect_list($"cents").over(w)))
-      .filter(size($"arr") === win)
+      .withColumn("arr", array_sort(collect_list(col("cents")).over(w)))
+      .filter(size(col("arr")) === win)
       .withColumn("med2", expr(med2("arr")))
       .withColumn("devs", expr(
         "array_sort(transform(arr, v -> abs(2 * v - med2)))"))
       .withColumn("mad4", expr(med2("devs"))) // devs are pre-doubled
       .withColumn("anomaly",
-        abs($"cents" * 2 - $"med2") * 2 > $"mad4" * 3)
-      .select($"day", $"cents", $"med2", $"mad4", $"anomaly")
-      .orderBy($"day")
+        abs(col("cents") * 2 - col("med2")) * 2 > col("mad4") * 3)
+      .select(col("day"), col("cents"), col("med2"), col("mad4"),
+        col("anomaly"))
   }
 
   /** Seasonality-adjusted robust anomalies: the composition the two
@@ -1822,25 +1828,8 @@ object Relational {
     */
   def benfordAudit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val digits = Tables(s, dir, "orders")
-      .filter($"o_totalprice" >= 1.0)
-      .select(substring(floor($"o_totalprice").cast("decimal(18,0)")
-        .cast("string"), 1, 1).cast("int").as("digit"))
-      .groupBy($"digit").agg(count(lit(1)).as("n_obs"))
-    val tot = digits.agg(sum($"n_obs").as("n_tot"))
-    val spine = s.range(1, 10).select($"id".cast("int").as("digit"))
-    spine.join(digits, Seq("digit"), "left")
-      .select($"digit", coalesce($"n_obs", lit(0L)).as("n_obs"))
-      .crossJoin(broadcast(tot))
-      // ln-ratio on BOTH engine sides (not a native log10): log10 and
-      // ln(x)/ln(10) differ in the last ulp, and exp_n multiplies the
-      // share by the row count before rounding
-      .withColumn("exp_share",
-        log(lit(1.0) + lit(1.0) / $"digit") / log(lit(10.0)))
-      .withColumn("exp_n", $"n_tot" * $"exp_share")
-      .withColumn("contrib_u",
-        round(($"n_obs" - $"exp_n") * ($"n_obs" - $"exp_n") / $"exp_n" * 1e6)
-          .cast("long"))
+    benfordAuditCore(benfordDigits(Tables(s, dir, "orders"),
+        $"o_totalprice"))
       .withColumn("chi2",
         round(sum($"contrib_u").over(Window.rowsBetween(
           Window.unboundedPreceding, Window.unboundedFollowing)) / 1e6, 4))
@@ -1848,6 +1837,36 @@ object Relational {
         round($"exp_n", 4).as("exp_n"),
         round($"contrib_u" / 1e6, 4).as("contrib"), $"chi2")
       .orderBy($"digit")
+  }
+
+  /** First-digit histogram `(digit, n_obs)` of the amounts of at least
+    * 1.0 — the input of [[benfordAuditCore]], batch and streaming. */
+  private[graft] def benfordDigits(rows: DataFrame,
+                                   amount: Column): DataFrame =
+    rows.filter(amount >= 1.0)
+      .select(substring(floor(amount).cast("decimal(18,0)")
+        .cast("string"), 1, 1).cast("int").as("digit"))
+      .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
+
+  /** [[benfordAudit]]'s digits 1–9 with each chi-square `contrib_u` in
+    * 1e-6 micro-units — shared with the streaming `benfordMonitorSink`.
+    * Needs a non-empty histogram. */
+  private[graft] def benfordAuditCore(digits: DataFrame): DataFrame = {
+    val tot = digits.agg(sum(col("n_obs")).as("n_tot"))
+    val spine = digits.sparkSession.range(1, 10)
+      .select(col("id").cast("int").as("digit"))
+    spine.join(digits, Seq("digit"), "left")
+      .select(col("digit"), coalesce(col("n_obs"), lit(0L)).as("n_obs"))
+      .crossJoin(broadcast(tot))
+      // ln-ratio on BOTH engine sides (not a native log10): log10 and
+      // ln(x)/ln(10) differ in the last ulp, and exp_n multiplies the
+      // share by the row count before rounding
+      .withColumn("exp_share",
+        log(lit(1.0) + lit(1.0) / col("digit")) / log(lit(10.0)))
+      .withColumn("exp_n", col("n_tot") * col("exp_share"))
+      .withColumn("contrib_u",
+        round((col("n_obs") - col("exp_n")) * (col("n_obs") - col("exp_n"))
+          / col("exp_n") * 1e6).cast("long"))
   }
 
   /** EWMA lag weights alpha*(1-alpha)^(k-1) for lags 1..maxLag,
@@ -1922,25 +1941,34 @@ object Relational {
       $"o_totalprice")
     val all = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
-    val upTo = Window.orderBy($"day")
+    cusumShiftCore(daily
+        .withColumn("scents", sum($"cents").over(all))
+        .withColumn("nd", count(lit(1)).over(all)),
+      expr("scents div nd"))
+      .orderBy($"day")
+  }
+
+  /** [[cusumShift]] over a `(day, cents)` frame against the mean `mu`
+    * (the series' own in batch, a frozen one in `cusumMonitorSink`). */
+  private[graft] def cusumShiftCore(daily: DataFrame,
+                                    mu: Column): DataFrame = {
+    val upTo = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
-      .withColumn("scents", sum($"cents").over(all))
-      .withColumn("nd", count(lit(1)).over(all))
-      .withColumn("mu", expr("scents div nd"))
+      .withColumn("mu", mu)
       .withColumn("slack", expr("mu div 20"))
       .withColumn("h", expr("mu div 4"))
-      .withColumn("d_hi", $"cents" - $"mu" - $"slack")
-      .withColumn("d_lo", $"cents" - $"mu" + $"slack")
-      .withColumn("p_hi", sum($"d_hi").over(upTo))
-      .withColumn("p_lo", sum($"d_lo").over(upTo))
+      .withColumn("d_hi", col("cents") - col("mu") - col("slack"))
+      .withColumn("d_lo", col("cents") - col("mu") + col("slack"))
+      .withColumn("p_hi", sum(col("d_hi")).over(upTo))
+      .withColumn("p_lo", sum(col("d_lo")).over(upTo))
       .withColumn("s_hi",
-        $"p_hi" - least(min($"p_hi").over(upTo), lit(0L)))
+        col("p_hi") - least(min(col("p_hi")).over(upTo), lit(0L)))
       .withColumn("s_lo",
-        greatest(max($"p_lo").over(upTo), lit(0L)) - $"p_lo")
-      .select($"day", $"cents", $"mu", $"h", $"s_hi", $"s_lo",
-        ($"s_hi" >= $"h").as("alarm_hi"), ($"s_lo" >= $"h").as("alarm_lo"))
-      .orderBy($"day")
+        greatest(max(col("p_lo")).over(upTo), lit(0L)) - col("p_lo"))
+      .select(col("day"), col("cents"), col("mu"), col("h"), col("s_hi"),
+        col("s_lo"), (col("s_hi") >= col("h")).as("alarm_hi"),
+        (col("s_lo") >= col("h")).as("alarm_lo"))
   }
 
   /** Simpson's-paradox trend audit: per-nation daily-revenue OLS slope
@@ -2413,31 +2441,35 @@ object Relational {
     */
   def pageHinkley(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    pageHinkleyCore(dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
+      $"o_totalprice")).orderBy($"day")
+  }
+
+  /** [[pageHinkley]] over a `(day, cents)` frame — shared with the
+    * streaming `pageHinkleySink`. */
+  private[graft] def pageHinkleyCore(daily: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = dailyCents(Tables(s, dir, "orders"), $"o_orderdate",
-      $"o_totalprice")
-    val ord = Window.orderBy($"day")
+    val ord = Window.orderBy(col("day"))
     val w = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
       .withColumn("t", row_number().over(ord).cast("long"))
-      .withColumn("s_cum", sum($"cents").over(w))
+      .withColumn("s_cum", sum(col("cents")).over(w))
       .withColumn("mbar_u",
         expr(s"CAST(s_cum AS $dec) * 1000000 div t").cast("long"))
       .withColumn("dev",
-        ($"cents".cast(dec) * lit(1000000L)) - $"mbar_u")
-      .withColumn("m_cum", sum($"dev").over(w))
-      .withColumn("ph_hi", $"m_cum" - min($"m_cum").over(w))
-      .withColumn("ph_lo", max($"m_cum").over(w) - $"m_cum")
-      .select($"day", $"cents", $"t", $"mbar_u",
+        (col("cents").cast(dec) * lit(1000000L)) - col("mbar_u"))
+      .withColumn("m_cum", sum(col("dev")).over(w))
+      .withColumn("ph_hi", col("m_cum") - min(col("m_cum")).over(w))
+      .withColumn("ph_lo", max(col("m_cum")).over(w) - col("m_cum"))
+      .select(col("day"), col("cents"), col("t"), col("mbar_u"),
         // cumulative deviations fit int64 at gate scale (~2e17 at
         // sf0.01); narrow loudly so both engines fail identically if a
         // scale-up breaks the bound
-        graft.functions.num.toLongChecked($"m_cum", "m_cum").as("m_cum"),
-        graft.functions.num.toLongChecked($"ph_hi", "ph_hi").as("ph_hi"),
-        graft.functions.num.toLongChecked($"ph_lo", "ph_lo").as("ph_lo"),
-        ($"ph_hi" >= expr("mbar_u div 4")).as("alarm_hi"),
-        ($"ph_lo" >= expr("mbar_u div 4")).as("alarm_lo"))
-      .orderBy($"day")
+        graft.functions.num.toLongChecked(col("m_cum"), "m_cum").as("m_cum"),
+        graft.functions.num.toLongChecked(col("ph_hi"), "ph_hi").as("ph_hi"),
+        graft.functions.num.toLongChecked(col("ph_lo"), "ph_lo").as("ph_lo"),
+        (col("ph_hi") >= expr("mbar_u div 4")).as("alarm_hi"),
+        (col("ph_lo") >= expr("mbar_u div 4")).as("alarm_lo"))
   }
 
   /** V-optimal histogram of the daily-revenue series (B buckets):

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.functions.{dates, geo}
-import graft.operators.Relational
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import graft.operators.{Events, Relational}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
@@ -77,82 +77,116 @@ object Streams {
         col("text"), toks, col("n_chars")) >= minQuality)
   }
 
-  /** Shared skeleton of the complete-mode monitor sinks: every trigger
-    * collects the WHOLE running aggregate `agg` (complete output mode)
-    * through `collect`, and appends the audit rows `audit` returns for
-    * it to `targetDir` under the column names `cols`. A sink writes
-    * nothing on a trigger where `audit` returns no rows — a trigger can
-    * fire with no data (start-before-input, recovery replay).
+  /** Appends the rows of the audit-sized frame `stats` to `targetDir`
+    * behind a leading `batch_id`; nothing when it has none. The rows are
+    * collected and the batch id joins them on the driver: a per-trigger
+    * literal in a plan would compile its generated code on every
+    * trigger.
     */
-  private def completeMonitor[A <: Product : TypeTag](
-      agg: DataFrame, targetDir: String, cols: Seq[String],
-      collect: DataFrame => Array[Row] = _.collect())(
-      audit: (Array[Row], Long) => Seq[A]): DataStreamWriter[Row] =
+  private def appendAudit(stats: DataFrame, batchId: Long,
+                          targetDir: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val rows = stats.collect().toSeq
+    if (rows.nonEmpty)
+      stats.sparkSession.createDataFrame(
+          rows.map(r => Row.fromSeq(batchId +: r.toSeq)).asJava,
+          StructType(StructField("batch_id", LongType, nullable = false) +:
+            stats.schema.fields))
+        .write.mode("append").parquet(targetDir)
+  }
+
+  /** Shared skeleton of the complete-mode monitor sinks: every trigger
+    * checkpoints the WHOLE running aggregate `agg` (complete output
+    * mode) — the one job that runs the stateful aggregation — and
+    * appends the audit frame `audit` builds over the checkpointed rows
+    * (a trigger can fire with no data: start-before-input, recovery
+    * replay). A persisted frame would not do: a core that joins the
+    * frame with itself reads one side past the cache and runs the
+    * aggregation again.
+    */
+  private def completeMonitor(agg: DataFrame, targetDir: String)(
+      audit: DataFrame => DataFrame): DataStreamWriter[Row] =
     agg.writeStream.outputMode("complete")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = audit(collect(batch), batchId)
-        if (rows.nonEmpty)
-          batch.sparkSession.createDataFrame(rows).toDF(cols: _*)
-            .write.mode("append").parquet(targetDir)
-        ()
+        appendAudit(audit(batch.localCheckpoint()), batchId, targetDir)
       }
 
+  /** A histogram monitor's audit frame `stats` named `cols`, or its
+    * `idle` row while the histogram `hist` is empty (the batch cores
+    * divide by the sample size, which ANSI mode rejects at zero). */
+  private def idleOr[A <: Product : TypeTag](hist: DataFrame,
+      cols: Seq[String], idle: A)(stats: => DataFrame): DataFrame =
+    if (hist.isEmpty) hist.sparkSession.createDataFrame(Seq(idle)).toDF(cols: _*)
+    else stats.toDF(cols: _*)
+
   /** The cents of a collected (day, cents) daily rollup, in day order. */
-  private def centsByDay(rows: Array[Row]): Seq[Long] =
-    rows.map(r => (r.getDate(0).toString, r.getLong(1))).sortBy(_._1)
-      .map(_._2).toSeq
+  private def centsByDay(batch: DataFrame): Seq[Long] =
+    batch.collect().map(r => (r.getDate(0).toString, r.getLong(1)))
+      .sortBy(_._1).map(_._2).toSeq
+
+  /** A daily-revenue monitor's audit row over its batch core's rows
+    * `perDay`, one per day seen: `n_days`, the last day's `stats`, how
+    * many days alarmed and whether the last day did (0 and false where
+    * the last day has no statistics, or there is no day). */
+  private def lastDayRow(perDay: DataFrame, stats: Seq[String],
+                         alarm: Column): DataFrame = {
+    def last(c: Column) = max_by(c, col("day"))
+    val aggs = stats.map(c => coalesce(last(col(c)), lit(0L)).as(c)) ++ Seq(
+      count_if(alarm).as("alarm_days"),
+      coalesce(last(alarm), lit(false)).as("alarm_now"))
+    perDay.agg(count(lit(1)).as("n_days"), aggs: _*)
+  }
 
   /** Streaming Holt linear-trend monitor — the stateful twin of
-    * [[graft.operators.Relational.holtLinear]]: the complete-mode daily
-    * rollup is re-walked per trigger with the batch operator's EXACT
-    * dyadic-gain integer recursion (α=1/4, β=1/8, truncating division),
-    * so the stream's level/trend/one-step forecast is bit-identical to
-    * a batch replay over the same days — the trend-aware upgrade of
-    * the EWMA sink, feeding the forecast a capacity decision acts on.
-    * Driver cost is calendar-bounded (one row per day ever seen).
+    * [[graft.operators.Relational.holtLinear]]: per trigger the
+    * complete-mode daily rollup is collected and folded with the batch
+    * operator's own driver fold, `Relational.holtSteps`, so the stream's
+    * level/trend/one-step forecast is bit-identical to a batch replay
+    * over the same days. Driver cost is calendar-bounded (one row per
+    * day ever seen).
     */
   def holtSink(orders: DataFrame, targetDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
-        targetDir, Seq("batch_id", "n_days", "level_u", "trend_u",
-          "forecast_next_u", "last_err_u")) { (rows, batchId) =>
-      val cents = centsByDay(rows)
-      Relational.holtSteps(cents).lastOption.toSeq.map(h =>
-        (batchId, cents.length.toLong, h.level, h.trend, h.level + h.trend,
-          h.err))
+        targetDir) { batch =>
+      val cents = centsByDay(batch)
+      batch.sparkSession.createDataFrame(
+          Relational.holtSteps(cents).lastOption.toSeq.map(h =>
+            (cents.length.toLong, h.level, h.trend, h.level + h.trend, h.err)))
+        .toDF("n_days", "level_u", "trend_u", "forecast_next_u", "last_err_u")
     }
 
   /** Streaming Holt–Winters monitor — the seasonal upgrade of
     * [[holtSink]] and the stateful twin of
     * [[graft.operators.Relational.holtWinters]]: per trigger the
-    * complete-mode daily rollup is re-walked with the batch operator's
-    * EXACT integer recursion (α=1/4, β=1/8, γ=1/8, rotating 7-slot
-    * weekly state, truncating division), so the stream's level / trend
-    * / next-step seasonal forecast is bit-identical to a batch replay
-    * over the same days. Driver cost is calendar-bounded.
+    * complete-mode daily rollup is folded with the batch operator's own
+    * driver fold, `Relational.holtWintersSteps`, so the stream's level /
+    * trend / next-step seasonal forecast is bit-identical to a batch
+    * replay over the same days. Driver cost is calendar-bounded.
     */
   def holtWintersSink(orders: DataFrame, targetDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
-        targetDir, Seq("batch_id", "n_days", "level_u", "trend_u",
-          "season_next_u", "forecast_next_u", "last_err_u")) {
-      (rows, batchId) =>
-        val cents = centsByDay(rows)
-        Relational.holtWintersSteps(cents).lastOption.toSeq.map(h =>
-          (batchId, cents.length.toLong, h.level, h.trend, h.seasonNext,
-            h.level + h.trend + h.seasonNext, h.err))
+        targetDir) { batch =>
+      val cents = centsByDay(batch)
+      batch.sparkSession.createDataFrame(
+          Relational.holtWintersSteps(cents).lastOption.toSeq.map(h =>
+            (cents.length.toLong, h.level, h.trend, h.seasonNext,
+              h.level + h.trend + h.seasonNext, h.err)))
+        .toDF("n_days", "level_u", "trend_u", "season_next_u",
+          "forecast_next_u", "last_err_u")
     }
 
-  /** Driver-state guard for the exact-histogram sinks: collect the
+  /** Driver-state guard for [[medianSink]]: collect the
     * (…, n) histogram rollup only when its cardinality is within
     * `maxGridCells`, else fail the stream with an actionable note. The
-    * exact sinks' state is bounded by the DISTINCT quantized values —
+    * exact sink's state is bounded by the DISTINCT quantized values —
     * range-bounded for the 2-dp fixture grids, but DATA-DEPENDENT on an
     * arbitrary value column, and an unbounded-cardinality column would
     * silently grow the per-trigger driver collect until the driver
     * dies. `limit(cap + 1)` bounds the transfer even in the failure
     * path; degrading to a coarser grid instead is deliberately NOT done
-    * here — it would silently break the sinks' stream ≡ batch exactness
+    * here — it would silently break the sink's stream ≡ batch exactness
     * contract, and the right coarsening (pre-quantizing the value
     * column) belongs to the caller who knows the value semantics.
     */
@@ -181,7 +215,10 @@ object Streams {
     * pinned by spec. Driver cost per trigger: |types|·|grid| rows,
     * guarded by `maxGridCells` (an unbounded-cardinality value column
     * fails fast with a remediation note instead of growing the driver
-    * collect without bound).
+    * collect without bound). It stays a twin of the batch operator:
+    * `medianValue` ranks raw rows and the stream holds only the
+    * histogram, so sharing either way would change a batch plan or the
+    * stream's state.
     */
   def medianSink(events: DataFrame, targetDir: String,
                  maxGridCells: Int = 1000000)
@@ -190,65 +227,39 @@ object Streams {
       .select(col("event_type"),
         round(col("value") * 10000).cast("long").as("vq"))
       .groupBy(col("event_type"), col("vq")).agg(count(lit(1)).as("n"))
-    completeMonitor(hist, targetDir,
-        Seq("batch_id", "event_type", "n_events", "median_value"),
-        collectBoundedHist(_, maxGridCells, "medianSink")) { (rows, batchId) =>
-      rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).toSeq.sortBy(_._1).map { case (tpe, cells) =>
-          val sorted = cells.sortBy(_._2)
-          val n = sorted.map(_._3).sum
-          // batch-op convention: rows (n+1) div 2 and n div 2 + 1,
-          // mean of the two (equal for odd n)
-          def at(rank: Long): Long = {
-            var cum = 0L
-            sorted.find { c => cum += c._3; cum >= rank }.get._2
-          }
-          val m = (at((n + 1) / 2) / 10000.0 +
-            at(n / 2 + 1) / 10000.0) / 2
-          (batchId, tpe, n,
-            BigDecimal(m).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-              .toDouble)
-        }
+    completeMonitor(hist, targetDir) { batch =>
+      batch.sparkSession.createDataFrame(
+        collectBoundedHist(batch, maxGridCells, "medianSink")
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+          .groupBy(_._1).toSeq.sortBy(_._1).map { case (tpe, cells) =>
+            val sorted = cells.sortBy(_._2)
+            val n = sorted.map(_._3).sum
+            // batch-op convention: rows (n+1) div 2 and n div 2 + 1,
+            // mean of the two (equal for odd n)
+            def at(rank: Long): Long = {
+              var cum = 0L
+              sorted.find { c => cum += c._3; cum >= rank }.get._2
+            }
+            val m = (at((n + 1) / 2) / 10000.0 +
+              at(n / 2 + 1) / 10000.0) / 2
+            (tpe, n,
+              BigDecimal(m).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+                .toDouble)
+          }).toDF("event_type", "n_events", "median_value")
     }
   }
 
   /** Streaming Shewhart p-chart — the control-chart twin of
-    * [[graft.operators.Events.pChart]]: each trigger recomputes the
-    * pooled rate and per-day 3σ limits over everything seen (state =
-    * per-day (n, errors) counts, calendar-bounded) and emits the full
-    * chart, so the LAST emission is row-identical to the batch operator
-    * over the same events — pinned by spec. The float stage mirrors the
-    * batch operator's exact-integer-to-double shapes, including Spark's
-    * BigDecimal HALF_UP rounding, so stream ≡ batch holds bit-for-bit.
+    * [[graft.operators.Events.pChart]]: the state is the batch per-day
+    * (n, errors) rollup `Events.dailyErrors` (calendar-bounded), and
+    * each trigger emits the batch core `Events.pChartCore` over it, so
+    * the LAST emission is row-identical to the batch operator over the
+    * same events. Nothing is written before the first day.
     */
   def pChartSink(events: DataFrame, targetDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val daily = events
-      .select(col("day").cast("date").as("day"),
-        (col("event_type") === "error").as("is_err"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"),
-        sum(when(col("is_err"), 1L).otherwise(0L)).as("x"))
-    completeMonitor(daily, targetDir, Seq("batch_id", "day", "n", "x",
-        "p_bp", "ucl_bp", "lcl_bp", "ooc")) { (rows, batchId) =>
-      val days = rows
-        .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      val sx = days.map(_._3).sum; val sn = days.map(_._2).sum
-      val pb = sx.toDouble / sn.toDouble
-      // Spark Round(double): BigDecimal.valueOf + HALF_UP — mirror it
-      def r0(v: Double): Long =
-        BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP)
-          .toLong
-      days.toSeq.map { case (day, n, x) =>
-        val sig = math.sqrt(pb * (1.0 - pb) / n.toDouble)
-        val ucl = r0((pb + 3.0 * sig) * 10000)
-        val lcl = math.max(0L, r0((pb - 3.0 * sig) * 10000))
-        val pBp = x * 10000 / n
-        (batchId, java.sql.Date.valueOf(day), n, x, pBp, ucl, lcl,
-          pBp > ucl || pBp < lcl)
-      }
-    }
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(Events.dailyErrors(events, col("day")), targetDir)(
+      Events.pChartCore)
 
   /** Streaming n-gram novelty gate + first-occurrence index — the
     * ingest twin of [[graft.operators.TextOps.ngramNovelty]]: each
@@ -371,45 +382,31 @@ object Streams {
 
   /** Streaming PSI drift monitor: each micro-batch's value distribution
     * is compared against a FROZEN reference histogram (driver-side
-    * (bin → count) pairs from the batch-side reference window — the
-    * bounded artifact, broadcast as literals like the label-noise
-    * gate's centroids), emitting one PSI row per micro-batch with the
-    * same add-one-smoothed fixed-point arithmetic as the batch
-    * `Events.psiDrift`. foreachBatch + a tiny per-batch rollup — no
-    * state store; the alarm a feature pipeline actually pages on.
+    * (bin → count) pairs from the batch-side reference window) by the
+    * batch core `Events.psiDriftCore` over `Events.psiCells`, one row
+    * per micro-batch with `contrib` summed. A value in no bin (negative
+    * or null) counts in `n_events` only, as the batch operator drops
+    * it. foreachBatch + a tiny per-batch rollup — no state store.
     */
   def psiDriftSink(events: DataFrame, refCounts: Seq[(Long, Long)],
                    targetDir: String, binWidth: Double = 50.0,
                    nBins: Int = 10)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val rt = refCounts.map(_._2).sum
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      import spark.implicits._
       val cur = batch
-        .select(least(lit(nBins - 1), floor(col("value") / binWidth))
-          .cast("long").as("bin"))
-        .groupBy($"bin").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val ct = cur.values.sum
-      val refMap = refCounts.toMap
-      val contribs = (0L until nBins.toLong).map { b =>
-        val rn = refMap.getOrElse(b, 0L); val cn = cur.getOrElse(b, 0L)
-        val pRefBp = (rn + 1) * 10000 / (rt + nBins)
-        val pCurBp = (cn + 1) * 10000 / (ct + nBins)
-        val lnrU = java.math.BigDecimal.valueOf(
-            math.log(((rn + 1) * (ct + nBins)).toDouble /
-              ((cn + 1) * (rt + nBins)).toDouble) * 1e6)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue
-        (pRefBp - pCurBp) * lnrU
-      }
-      val psiU = contribs.sum
-      Seq((batchId, ct, psiU, psiU >= 1000000000L)) // 0.1 in 1e-10 units
-        .toDF("batch_id", "n_events", "psi_e10", "drift_alarm")
-        .write.mode("append").parquet(targetDir)
-      ()
+        .select(Events.psiBin(col("value"), binWidth, nBins).as("bin"))
+        .groupBy(col("bin")).agg(count(lit(1)).as("cur_n"))
+      val ref = batch.sparkSession.createDataFrame(refCounts)
+        .toDF("bin", "ref_n")
+      appendAudit(Events.psiDriftCore(
+          Events.psiCells(ref.join(cur, Seq("bin"), "full"), nBins), nBins)
+        .agg(sum(col("contrib")).as("psi_e10"))
+        .crossJoin(broadcast(cur.agg(sum(col("cur_n")).as("n_events"))))
+        .select(coalesce(col("n_events"), lit(0L)).as("n_events"),
+          col("psi_e10"),
+          (col("psi_e10") >= 1000000000L).as("drift_alarm")), // 0.1 in 1e-10
+        batchId, targetDir)
     }
-  }
 
   /** Frozen-rate stratified sampling gate: the serving twin of
     * `Events.neymanAllocation` — the batch design fixes per-stratum keep
@@ -426,35 +423,19 @@ object Streams {
 
   /** CUSUM level-shift monitor: the streaming twin of
     * `Relational.cusumShift` — a stateful running per-day revenue
-    * histogram (complete-mode aggregation), walked per trigger with the
-    * batch operator's exact prefix-min identity against a FROZEN mean μ
-    * (from the reference window, the psiDriftSink convention — a live μ
-    * would let the drift poison its own baseline). Emits the latest
-    * day's two CUSUM statistics plus how many days have ever alarmed;
-    * a stream that has seen the same days reports the batch numbers
-    * exactly. State is one row per day — calendar-sized, not
-    * throughput-sized.
+    * rollup (one row per day), over which each trigger evaluates the
+    * batch core `Relational.cusumShiftCore` against a FROZEN mean μ
+    * (a live μ would let the drift poison its own baseline). Emits the
+    * latest day's two CUSUM statistics plus how many days have ever
+    * alarmed — the batch numbers for the same days.
     */
   def cusumMonitorSink(orders: DataFrame, mu: Long, targetDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val slack = mu / 20
-    val h = mu / 4
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
-        targetDir, Seq("batch_id", "n_days", "s_hi", "s_lo", "alarm_days",
-          "alarm_now")) { (rows, batchId) =>
-      val days = centsByDay(rows)
-      var pHi = 0L; var minPHi = 0L; var pLo = 0L; var maxPLo = 0L
-      var sHi = 0L; var sLo = 0L; var alarmDays = 0L
-      days.foreach { cents =>
-        pHi += cents - mu - slack; minPHi = math.min(minPHi, pHi)
-        pLo += cents - mu + slack; maxPLo = math.max(maxPLo, pLo)
-        sHi = pHi - minPHi; sLo = maxPLo - pLo
-        if (sHi >= h || sLo >= h) alarmDays += 1
-      }
-      Seq((batchId, days.length.toLong, sHi, sLo, alarmDays,
-        sHi >= h || sLo >= h))
+        targetDir) { batch =>
+      lastDayRow(Relational.cusumShiftCore(batch, lit(mu)),
+        Seq("s_hi", "s_lo"), col("alarm_hi") || col("alarm_lo"))
     }
-  }
 
   /** Conformal coverage gate: the streaming application of
     * `TextOps.conformalCalibration` — the batch pass fixes the
@@ -480,37 +461,19 @@ object Streams {
       .drop("toks")
 
   /** Page–Hinkley drift monitor: the streaming twin of
-    * `Relational.pageHinkley` — same complete-mode daily-histogram
-    * state as the CUSUM sink (one row per calendar day, never
-    * throughput-sized), walked per trigger with the batch operator's
-    * exact integer recursion against the RUNNING mean (the adaptive
-    * complement to cusumMonitorSink's frozen μ: no reference window
-    * to pick, the monitor self-baselines). First-day deviation is
-    * identically zero (S₁·10⁶/1 is exact), so the prefix extrema
-    * start well-defined at 0. Emits the latest day's PH pair, the
-    * current running mean, and how many days have ever alarmed; a
-    * stream that has seen the same days reports the batch numbers
-    * exactly.
+    * `Relational.pageHinkley` — the CUSUM sink's daily-revenue state,
+    * over which each trigger evaluates the batch core
+    * `Relational.pageHinkleyCore` against the RUNNING mean (no
+    * reference window to pick: the monitor self-baselines). Emits the
+    * latest day's PH pair, the running mean, and how many days have
+    * ever alarmed — the batch numbers for the same days.
     */
   def pageHinkleySink(orders: DataFrame, targetDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
-        targetDir, Seq("batch_id", "n_days", "ph_hi", "ph_lo", "mbar_u",
-          "alarm_days", "alarm_now")) { (rows, batchId) =>
-      var sCum = BigInt(0); var m = BigInt(0)
-      var mMin = BigInt(0); var mMax = BigInt(0)
-      var phHi = BigInt(0); var phLo = BigInt(0)
-      var mbar = BigInt(0); var t = 0L; var alarmDays = 0L
-      centsByDay(rows).foreach { cents =>
-        t += 1; sCum += cents
-        mbar = sCum * 1000000 / t
-        m += BigInt(cents) * 1000000 - mbar
-        mMin = mMin.min(m); mMax = mMax.max(m)
-        phHi = m - mMin; phLo = mMax - m
-        if (phHi >= mbar / 4 || phLo >= mbar / 4) alarmDays += 1
-      }
-      Seq((batchId, t, phHi.toLong, phLo.toLong, mbar.toLong,
-        alarmDays, phHi >= mbar / 4 || phLo >= mbar / 4))
+        targetDir) { batch =>
+      lastDayRow(Relational.pageHinkleyCore(batch),
+        Seq("ph_hi", "ph_lo", "mbar_u"), col("alarm_hi") || col("alarm_lo"))
     }
 
   /** Streaming cluster maintenance: a similarity-pair stream folds into
@@ -534,169 +497,97 @@ object Streams {
     }
 
   /** Robust-baseline drift monitor: the streaming twin of
-    * `Relational.rollingMedianMad` — the same complete-mode daily
-    * rollup as the Page–Hinkley sink (one row per calendar day, never
-    * per event), re-walked per trigger with the batch operator's exact
-    * doubled-median/quadrupled-MAD order statistics, so the stream's
-    * alarm history is BIT-IDENTICAL to a batch replay of the days seen
-    * so far (the stream==batch contract the spec pins). Driver cost per
-    * trigger is calendar-bounded (≤ n_days windows of `win` longs) —
-    * the same budget the batch operator's window pass spends.
+    * `Relational.rollingMedianMad` — the CUSUM sink's daily-revenue
+    * state, over which each trigger evaluates the batch core
+    * `Relational.rollingMedianMadCore`, so the alarm history is
+    * BIT-IDENTICAL to a batch replay of the days seen so far. `n_days`
+    * counts the warm-up days too; before the first full window the
+    * statistics are 0.
     */
   def robustBaselineSink(orders: DataFrame, targetDir: String,
                          win: Int = 28)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     completeMonitor(Relational.dailyCents(orders, col("day"), col("amount")),
-        targetDir, Seq("batch_id", "n_days", "med2", "mad4", "alarm_days",
-          "alarm_now")) { (rows, batchId) =>
-      val days = centsByDay(rows)
-      def m2(xs: Seq[Long]): Long = {
-        val s = xs.sorted
-        s((s.length + 1) / 2 - 1) + s((s.length + 2) / 2 - 1)
-      }
-      var alarmDays = 0L; var lastAlarm = false
-      var lastMed2 = 0L; var lastMad4 = 0L
-      for (i <- (win - 1) until days.length) {
-        val w = (i - win + 1 to i).map(days)
-        val med2 = m2(w)
-        val mad4 = m2(w.map(v => math.abs(2 * v - med2)))
-        val a = math.abs(days(i) * 2 - med2) * 2 > mad4 * 3
-        if (a) alarmDays += 1
-        if (i == days.length - 1) {
-          lastAlarm = a; lastMed2 = med2; lastMad4 = mad4
-        }
-      }
-      Seq((batchId, days.length.toLong, lastMed2, lastMad4,
-        alarmDays, lastAlarm))
+        targetDir) { batch =>
+      // the core has no row for a warm-up day, which n_days still counts
+      lastDayRow(batch.select(col("day")).join(
+          Relational.rollingMedianMadCore(batch, win), Seq("day"), "left"),
+        Seq("med2", "mad4"), col("anomaly"))
     }
+
+  /** `(vq, c1, c2)` cells of a frozen reference histogram against a
+    * running one `(vq, n)` — the stream is the second sample. */
+  private def refCells(ref: Seq[(Long, Long)], cur: DataFrame): DataFrame =
+    cur.sparkSession.createDataFrame(ref).toDF("vq", "c1")
+      .join(cur.withColumnRenamed("n", "c2"), Seq("vq"), "full")
+      .select(col("vq"), coalesce(col("c1"), lit(0L)).as("c1"),
+        coalesce(col("c2"), lit(0L)).as("c2"))
+
+  /** The running 1e-4 value-grid histogram `(vq, n)` of a value stream. */
+  private def valueGrid(values: DataFrame): DataFrame =
+    values.select(round(col("value") * 10000).cast("long").as("vq"))
+      .groupBy(col("vq")).agg(count(lit(1)).as("n"))
 
   /** Exact-KS drift monitor: the streaming twin of `Events.ksDrift` —
-    * a STATEFUL running per-value histogram on the 1e-4 quantization
-    * grid (complete-mode aggregation, so the state store carries one
-    * row per distinct value ever seen), compared per trigger against
-    * the frozen early-half reference (`Events.ksReferenceCounts`) with
-    * the batch operator's exact integer arithmetic: one driver-side
-    * merge walk over the bounded value grid computes sup |c1·n2 − c2·n1|
-    * and the same α=0.05 threshold, so a stream that has seen the same
-    * rows reports the identical d_num/d_bp to the batch test. No bin
-    * choice anywhere — the monitor catches shape drift PSI's histogram
-    * smears away, at the cost of value-grid-sized (bounded) state.
+    * a STATEFUL running histogram on the 1e-4 value grid (one state row
+    * per distinct value ever seen), against which each trigger evaluates
+    * the batch core `Events.ksDriftCore` with the frozen early-half
+    * reference (`Events.ksReferenceCounts`) as the first sample — the
+    * batch d_num/d_bp for the same rows. Before the first value the row
+    * is idle (`crit_bp` = Long.MaxValue, never drifted).
     */
   def ksDriftSink(values: DataFrame, refCounts: Seq[(Long, Long)],
-                  targetDir: String, maxGridCells: Int = 1000000)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val n1 = refCounts.map(_._2).sum
-    val hist = values
-      .select(round(col("value") * 10000).cast("long").as("vq"))
-      .groupBy(col("vq")).agg(count(lit(1)).as("n"))
-    completeMonitor(hist, targetDir,
-        Seq("batch_id", "n_cur", "d_num", "d_bp", "crit_bp", "drifted"),
-        collectBoundedHist(_, maxGridCells, "ksDriftSink")) { (rows, batchId) =>
-      val cur = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val n2 = cur.values.sum
-      val refMap = refCounts.toMap
-      var c1 = 0L; var c2 = 0L; var dNum = 0L
-      (refMap.keySet ++ cur.keySet).toSeq.sorted.foreach { v =>
-        c1 += refMap.getOrElse(v, 0L)
-        c2 += cur.getOrElse(v, 0L)
-        dNum = math.max(dNum, math.abs(c1 * n2 - c2 * n1))
+                  targetDir: String)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(valueGrid(values), targetDir) { batch =>
+      idleOr(batch, Seq("n_cur", "d_num", "d_bp", "crit_bp",
+          "drifted"), (0L, 0L, 0L, Long.MaxValue, false)) {
+        Events.ksDriftCore(refCells(refCounts, batch))
+          .select(col("n_late"), col("d_num"), col("d_bp"), col("crit_bp"),
+            col("drifted"))
       }
-      val dBp = if (n2 > 0) dNum * 10000 / (n1 * n2) else 0L
-      val crit = if (n2 > 0)
-        math.round(13581.0 *
-          math.sqrt((n1 + n2).toDouble / (n1 * n2).toDouble))
-      else Long.MaxValue
-      Seq((batchId, n2, dNum, dBp, crit, n2 > 0 && dBp >= crit))
     }
-  }
 
   /** Energy-distance drift monitor — the streaming twin of
-    * `Events.energyDistance` against the same frozen early-half
-    * reference `ksDriftSink` probes: a stateful complete-mode value
-    * histogram per trigger, the three pairwise-|Δ| sums from one
-    * sorted merge over the bounded value grid (BigInt driver walk —
-    * the grid is 1e-4-quantized, audit-sized), floored micro means,
-    * alarm at a caller-frozen energy threshold. Where KS pages on the
-    * sup CDF gap, energy pages on ANY distributional change — scale
-    * and shape drifts a location-insensitive monitor misses.
+    * `Events.energyDistance`: [[ksDriftSink]]'s state and reference,
+    * evaluated per trigger by the batch core `Events.energyDistanceCore`
+    * and alarmed at a caller-frozen threshold. Before the first value
+    * the row is all zero. Where KS pages on the sup CDF gap, energy
+    * pages on ANY distributional change.
     */
   def energyDriftSink(values: DataFrame, refCounts: Seq[(Long, Long)],
-                      targetDir: String, alarmU: Long,
-                      maxGridCells: Int = 1000000)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val hist = values
-      .select(round(col("value") * 10000).cast("long").as("vq"))
-      .groupBy(col("vq")).agg(count(lit(1)).as("n"))
-    completeMonitor(hist, targetDir, Seq("batch_id", "n_cur", "a_u", "b_u",
-        "c_u", "energy_u", "drifted"),
-        collectBoundedHist(_, maxGridCells, "energyDriftSink")) {
-      (rows, batchId) =>
-        val cur = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val ref = refCounts.toMap
-        val n1 = BigInt(ref.values.sum); val n2 = BigInt(cur.values.sum)
-        if (n2 > 0) {
-          val grid = (ref.keySet ++ cur.keySet).toSeq.sorted
-          val s1t = grid.map(v => BigInt(ref.getOrElse(v, 0L)) * v).sum
-          val s2t = grid.map(v => BigInt(cur.getOrElse(v, 0L)) * v).sum
-          var cc1 = BigInt(0); var ss1 = BigInt(0)
-          var cc2 = BigInt(0); var ss2 = BigInt(0)
-          var sxy = BigInt(0); var sxx = BigInt(0); var syy = BigInt(0)
-          grid.foreach { v =>
-            val r: Long = ref.getOrElse(v, 0L)
-            val c: Long = cur.getOrElse(v, 0L)
-            cc1 += r; ss1 += BigInt(r) * v
-            cc2 += c; ss2 += BigInt(c) * v
-            def around(cp: BigInt, sp: BigInt, ct: BigInt, st: BigInt) =
-              cp * v - sp + (st - sp) - (ct - cp) * v
-            sxy += BigInt(c) * around(cc1, ss1, n1, s1t)
-            sxx += BigInt(r) * around(cc1, ss1, n1, s1t)
-            syy += BigInt(c) * around(cc2, ss2, n2, s2t)
-          }
-          val aU = (sxy * 100 / (n1 * n2)).toLong
-          val bU = (sxx * 100 / (n1 * n1)).toLong
-          val cU = (syy * 100 / (n2 * n2)).toLong
-          val e = 2 * aU - bU - cU
-          Seq((batchId, n2.toLong, aU, bU, cU, e, e >= alarmU))
-        } else Seq((batchId, 0L, 0L, 0L, 0L, 0L, false))
+                      targetDir: String, alarmU: Long)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(valueGrid(values), targetDir) { batch =>
+      idleOr(batch, Seq("n_cur", "a_u", "b_u", "c_u", "energy_u",
+          "drifted"), (0L, 0L, 0L, 0L, 0L, false)) {
+        Events.energyDistanceCore(refCells(refCounts, batch))
+          .select(col("n_late"), col("a_u"), col("b_u"), col("c_u"),
+            col("energy_u"), col("energy_u") >= alarmU)
+      }
     }
-  }
 
   /** Benford first-digit monitor: the streaming twin of
-    * `Relational.benfordAudit` — a genuinely STATEFUL streaming
-    * aggregation (the running per-digit histogram lives in the state
-    * store and survives across triggers), snapshotted per batch into a
-    * (batch_id, n_orders, chi2_u, skew_alarm) audit row. The chi-square
-    * arithmetic is the batch operator's exactly: per-digit contributions
-    * in 1e-6 micro-units, HALF_UP, summed as longs — so a stream that
-    * has seen the same rows reports the same statistic to the last
-    * micro-unit, and the alarm is a pure threshold on that shared
-    * number. 9 rows of state per stream: the histogram compaction makes
-    * the monitor free at any throughput.
+    * `Relational.benfordAudit` — the batch digit histogram
+    * `Relational.benfordDigits` as running state (9 rows), snapshotted
+    * per trigger into a (batch_id, n_orders, chi2_u, skew_alarm) row by
+    * summing the batch core `Relational.benfordAuditCore`'s `contrib_u`
+    * — the batch statistic to the last micro-unit. Before the first
+    * amount of at least 1.0 the row is all zero.
     */
   def benfordMonitorSink(amounts: DataFrame, targetDir: String,
                          alarmChi2U: Long)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val digits = amounts
-      .filter(col("amount") >= 1.0)
-      .select(substring(floor(col("amount")).cast("decimal(18,0)")
-        .cast("string"), 1, 1).cast("int").as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
-    completeMonitor(digits, targetDir,
-        Seq("batch_id", "n_orders", "chi2_u", "skew_alarm")) {
-      (rows, batchId) =>
-        // the COMPLETE running histogram at this trigger (<= 9 rows)
-        val counts = rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val nTot = counts.values.sum
-        val chi2U = (1 to 9).map { d =>
-          val nObs = counts.getOrElse(d, 0L)
-          val expN = nTot * (math.log(1.0 + 1.0 / d) / math.log(10.0))
-          java.math.BigDecimal
-            .valueOf((nObs - expN) * (nObs - expN) / expN * 1e6)
-            .setScale(0, java.math.RoundingMode.HALF_UP).longValue
-        }.sum
-        Seq((batchId, nTot, chi2U, chi2U >= alarmChi2U))
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    completeMonitor(Relational.benfordDigits(amounts, col("amount")),
+        targetDir) { batch =>
+      idleOr(batch, Seq("n_orders", "chi2_u", "skew_alarm"),
+          (0L, 0L, false)) {
+        Relational.benfordAuditCore(batch)
+          .agg(sum(col("n_obs")), sum(col("contrib_u")).as("chi2_u"))
+          .select(col("sum(n_obs)"), col("chi2_u"),
+            col("chi2_u") >= alarmChi2U)
+      }
     }
-  }
 
   /** Gopher-rule ingest gate: the streaming twin of
     * `TextOps.gopherRules` — all seven Rae et al. 2021 screens evaluated

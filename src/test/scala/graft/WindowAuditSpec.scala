@@ -26,15 +26,15 @@ class WindowAuditSpec extends AnyFunSuite {
     ("Relational.scala", "globalPrefixSum"),
     ("Relational.scala", "globalPrefixSums"),
     // 1e-4 value-grid rollups (distinct quantized values, range-bounded)
-    ("Events.scala", "ksDrift"),
-    ("Events.scala", "energyDistance"),
+    ("Events.scala", "ksDriftCore"),
+    ("Events.scala", "energyDistanceCore"),
     ("Events.scala", "emdDrift"),
     ("Events.scala", "mannWhitney"),
     ("Events.scala", "logRankTest"),
     ("Events.scala", "kaplanMeier"),
     ("Events.scala", "nelsonAalen"),
     ("Relational.scala", "kruskalWallis"),
-    ("Relational.scala", "rollingMedianMad"),
+    ("Relational.scala", "rollingMedianMadCore"),
     ("Relational.scala", "newsvendor"),
     ("Relational.scala", "vOptimalHistogram"),
     ("Dedup.scala", "dedupSurvivorship"),
@@ -55,8 +55,8 @@ class WindowAuditSpec extends AnyFunSuite {
     ("Relational.scala", "movingAvgRevenue"),
     ("Relational.scala", "seasonalDecompose"),
     ("Relational.scala", "maseBacktest"),
-    ("Relational.scala", "cusumShift"),
-    ("Relational.scala", "pageHinkley"),
+    ("Relational.scala", "cusumShiftCore"),
+    ("Relational.scala", "pageHinkleyCore"),
     ("Relational.scala", "changepoint"),
     ("Relational.scala", "pettittChangepoint"),
     ("Relational.scala", "durbinWatson"),

@@ -893,6 +893,81 @@ class StreamingSpec extends SparkSpec {
     assert(rows(1L)._3, "an injected leading-9 flood must alarm")
   }
 
+  test("complete-mode monitors on a first trigger whose aggregate is " +
+       "empty: the idle audit row, or no output at all") {
+    import org.apache.spark.sql.{DataFrame, Encoder, Row}
+    import org.apache.spark.sql.streaming.DataStreamWriter
+    type Sink = (DataFrame, String) => DataStreamWriter[Row]
+    /** What one trigger over `feed` leaves in the sink's directory:
+      * None when the directory was never created. */
+    def firstTrigger[A: Encoder](feed: Seq[A], cols: String*)(
+        sink: Sink): Option[Seq[Row]] = {
+      val dst = java.nio.file.Files.createTempDirectory("idle-out")
+        .toString + "/out"
+      val ckpt = java.nio.file.Files.createTempDirectory("idle-ckpt")
+        .toString
+      val input = MemoryStream[A](spark)
+      val q = sink(input.toDF().toDF(cols: _*), dst)
+        .option("checkpointLocation", ckpt).start()
+      try { input.addData(feed); q.processAllAvailable() } finally q.stop()
+      if (new java.io.File(dst).exists)
+        Some(spark.read.parquet(dst).collect().toSeq)
+      else None
+    }
+    val ref = Seq((1000000L, 3L), (2000000L, 1L))
+    def orders(sink: Sink) =
+      firstTrigger(Seq.empty[(String, Double)], "day", "amount")(sink)
+    def values(sink: Sink) =
+      firstTrigger(Seq.empty[Double], "value")(sink)
+    val cases: Seq[(String, () => Option[Seq[Row]], Option[Seq[Row]])] = Seq(
+      ("holtSink", () => orders(Streams.holtSink), None),
+      ("holtWintersSink", () => orders(Streams.holtWintersSink), None),
+      ("medianSink", () => firstTrigger(Seq.empty[(String, Double)],
+        "event_type", "value")(Streams.medianSink(_, _)), None),
+      ("pChartSink", () => firstTrigger(Seq.empty[(String, String)],
+        "day", "event_type")(Streams.pChartSink), None),
+      ("cusumMonitorSink", () => orders(Streams.cusumMonitorSink(_, 1000L, _)),
+        Some(Seq(Row(0L, 0L, 0L, 0L, 0L, false)))),
+      ("pageHinkleySink", () => orders(Streams.pageHinkleySink),
+        Some(Seq(Row(0L, 0L, 0L, 0L, 0L, 0L, false)))),
+      ("robustBaselineSink", () => orders(Streams.robustBaselineSink(_, _)),
+        Some(Seq(Row(0L, 0L, 0L, 0L, 0L, false)))),
+      ("ksDriftSink", () => values(Streams.ksDriftSink(_, ref, _)),
+        Some(Seq(Row(0L, 0L, 0L, 0L, Long.MaxValue, false)))),
+      ("energyDriftSink", () => values(Streams.energyDriftSink(_, ref, _, 1L)),
+        Some(Seq(Row(0L, 0L, 0L, 0L, 0L, 0L, false)))),
+      // every amount below 1.0: no first digit, an empty histogram
+      ("benfordMonitorSink", () => firstTrigger(Seq(0.5), "amount")(
+        Streams.benfordMonitorSink(_, _, 1L)),
+        Some(Seq(Row(0L, 0L, 0L, false)))))
+    val wrong = cases.flatMap { case (name, run, want) =>
+      val got = scala.util.Try(run())
+      if (got.toOption.contains(want)) None else Some(s"$name: $got")
+    }
+    assert(wrong.isEmpty, "on an empty first trigger")
+  }
+
+  test("psiDriftSink bins like the batch PSI: a negative value falls " +
+       "outside every bin and leaves psi_e10 unchanged") {
+    val dst = java.nio.file.Files.createTempDirectory("psi-neg-out")
+      .toString + "/psi"
+    val ckpt = java.nio.file.Files.createTempDirectory("psi-neg-ckpt")
+      .toString
+    val ref = Seq((0L, 40L), (1L, 30L), (2L, 20L), (9L, 10L))
+    val cur = Seq(10.0, 20.0, 60.0, 75.0, 130.0, 480.0, 495.0, 999.0)
+    val input = MemoryStream[Double](spark)
+    val q = Streams.psiDriftSink(input.toDF().toDF("value"), ref, dst)
+      .option("checkpointLocation", ckpt).start()
+    input.addData(cur); q.processAllAvailable()
+    input.addData(cur :+ -5.0); q.processAllAvailable()
+    q.stop()
+    val rows = spark.read.parquet(dst).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(rows(1L)._1 === rows(0L)._1 + 1, "n_events counts every row")
+    assert(rows(1L)._2 === rows(0L)._2,
+      "a value in no bin changed the PSI")
+  }
+
   test("gopherGate streams bit-identical verdicts to the batch rule suite") {
     val words = Seq("the", "a")
     val input = MemoryStream[(Long, String)](spark)
