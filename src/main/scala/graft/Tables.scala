@@ -1,8 +1,15 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Reader for the driver's synthetic tables (TESTDATA.md).
   *
@@ -21,6 +28,14 @@ import org.apache.spark.sql.types._
   *    reads it as TIMESTAMP_NTZ; cast to the session-zone TIMESTAMP
   *    (session zone pinned to UTC in [[Sessions]], so the wall-clock
   *    values are preserved bit-for-bit and match DuckDB's naive read).
+  *
+  * Schema: [[readParquet]] takes each table's schema from a parquet
+  * footer on the driver, so building a frame over a table starts no
+  * Spark job (a schema-less `spark.read.parquet` runs a one-task
+  * schema-inference job on every read). It falls back to Spark's own
+  * inference where no data file sits at the top level. There is no
+  * cache: the footer read is cheap, and a memo of the inferred schema
+  * would need invalidating whenever a file is rewritten.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -45,7 +60,7 @@ object Tables {
     // silently shift every timestamp, so fail loudly instead
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "Tables requires spark.sql.session.timeZone=UTC (use graft.Sessions)")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = readParquet(spark, s"$dir/$name.parquet")
     // only top-level NTZ columns are normalized; a generator that starts
     // emitting NTZ inside structs/arrays/maps must extend this, not slip
     // through half-converted
@@ -63,6 +78,55 @@ object Tables {
       case None => df
     }
   }
+
+  /** `spark.read.parquet(path)` with the schema from [[footerSchema]]
+    * when there is one, so the read starts no job; otherwise Spark's own
+    * inference, with its result and its error.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+
+  /** The schema Spark's inference gives the parquet data at `path`, read
+    * on the driver from one file's footer: `path` itself, or the first
+    * data file of a flat directory in path order, skipping the names
+    * Spark's file index skips. This is the file the inference job reads
+    * when schemas are not merged, and the footer goes through Spark's own
+    * conversion with the session's flags (binary-as-string, INT96,
+    * TIMESTAMP_NTZ, nanos-as-long), as that job does.
+    *
+    * `None` where that choice is not plain: a glob, a directory with a
+    * subdirectory (partitioned) or a summary file, no data file at all,
+    * or a path or footer that cannot be read. Callers then fall back to
+    * the inference job, which gives the same result or the same error.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val p = new Path(path)
+      // HadoopFSUtils.shouldFilterOutPathName: the names the index skips
+      val listed = p.getFileSystem(hconf).listStatus(p).filterNot { s =>
+        val n = s.getPath.getName
+        ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")) &&
+          !n.startsWith("_metadata") && !n.startsWith("_common_metadata")
+      }
+      if (listed.exists(s => s.isDirectory || s.getPath.getName.startsWith("_"))) None
+      else listed.sortBy(_.getPath.toString).headOption.map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hconf),
+          HadoopReadOptions.builder(hconf)
+            .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+        val footer = try reader.getFooter finally reader.close()
+        val conf = spark.sessionState.conf
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+      }
+    } catch { case NonFatal(_) => None }
 
   /** Optional JDBC connector (SURVEY §2.1 S7 — the reference reads its
     * tables over JDBC from Postgres; here parquet is the canonical store

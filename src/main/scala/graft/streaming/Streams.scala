@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.functions.{dates, geo}
 import graft.operators.{Events, Relational}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
@@ -828,7 +829,7 @@ object Streams {
     val exists = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
     val fresh =
       if (!exists) rows
-      else rows.join(spark.read.parquet(targetDir).select(keys.map(col): _*),
+      else rows.join(Tables.readParquet(spark, targetDir).select(keys.map(col): _*),
         keys, "left_anti")
     fresh.write.mode("append").parquet(targetDir)
   }
@@ -867,7 +868,7 @@ object Streams {
       val (state, committedId) =
         if (!fs.exists(statePath)) (Map.empty[String, Long], -1L)
         else {
-          val rows = spark.read.parquet(statePath.toString).collect()
+          val rows = Tables.readParquet(spark, statePath.toString).collect()
           (rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
             rows.map(_.getLong(2)).foldLeft(-1L)(math.max))
         }
@@ -1032,7 +1033,7 @@ object Streams {
       val resolved = resolveCdcMeta(fs, root)
       if (batchId > resolved.map(_._2).getOrElse(-1L)) {
         val stored = resolved
-          .map { case (d, _) => spark.read.parquet(
+          .map { case (d, _) => Tables.readParquet(spark,
             new org.apache.hadoop.fs.Path(root, d).toString) }
           .getOrElse(spark.createDataFrame(
             spark.sparkContext.emptyRDD[Row], schema))
@@ -1120,7 +1121,7 @@ object Streams {
     val (vdir, _) = resolveCdcMeta(fs, root).getOrElse(
       throw new IllegalStateException(
         s"no committed _cdc_meta_<id> under $snapshotDir"))
-    s.read.parquet(new org.apache.hadoop.fs.Path(root, vdir).toString)
+    Tables.readParquet(s, new org.apache.hadoop.fs.Path(root, vdir).toString)
   }
 
   /** Stream-vs-stored-index dedup probe: arriving documents are banded

@@ -47,7 +47,7 @@ object Layout {
   def compact(spark: SparkSession, srcDir: String, dstDir: String,
               targetFileBytes: Long = 128L << 20,
               clusterBy: Seq[String] = Nil): Int = {
-    val df = spark.read.parquet(srcDir)
+    val df = graft.Tables.readParquet(spark, srcDir)
     val n = math.max(1, math.ceil(inputBytes(df).toDouble / targetFileBytes).toInt)
     val shaped =
       if (clusterBy.isEmpty) df.repartition(n)
@@ -56,7 +56,7 @@ object Layout {
         df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
       }
     shaped.write.mode("overwrite").parquet(dstDir)
-    spark.read.parquet(dstDir).inputFiles.length
+    graft.Tables.readParquet(spark, dstDir).inputFiles.length
   }
 
   /** OPTIMIZE for a BUCKETED catalog table (the stored band / winnow /
@@ -295,7 +295,7 @@ object Layout {
     import org.apache.spark.sql.functions._
     require(zorderBy.size >= 2 && zorderBy.size <= 3,
       s"zOrderCompact clusters 2-3 dims, got ${zorderBy.size}")
-    val df = spark.read.parquet(srcDir)
+    val df = graft.Tables.readParquet(spark, srcDir)
     val nOut = math.max(1, math.ceil(
       inputBytes(df).toDouble / targetFileBytes).toInt)
     val aggs = zorderBy.flatMap(c => Seq(
@@ -314,6 +314,6 @@ object Layout {
     df.repartitionByRange(nOut, zkey)
       .sortWithinPartitions(zkey)
       .write.mode("overwrite").parquet(dstDir)
-    spark.read.parquet(dstDir).inputFiles.length
+    graft.Tables.readParquet(spark, dstDir).inputFiles.length
   }
 }
